@@ -19,6 +19,7 @@ import argparse
 import io
 import json
 import os
+import statistics
 import sys
 import time
 import urllib.request
@@ -265,7 +266,7 @@ def main():
                 print(f"--- {name}#{rep} {dt:.3f}s stages:")
                 print(stage_report(rest_stages(spark), last_stage + 1))
         spark.sparkContext.setJobDescription(None)
-        results[name] = {"samples": ts, "median": sorted(ts)[len(ts) // 2], "min": min(ts)}
+        results[name] = {"samples": ts, "median": statistics.median(ts), "min": min(ts)}
         print(name, results[name], flush=True)
     print(json.dumps({"sf_dir": SF_DIR, "cpus": cpus, "results": results}))
     spark.stop()

@@ -15,6 +15,14 @@ no recomputation of committed stripes, the north-rule resume property.
 
 Spark (not the reference's windows) handles memory: each batch job
 spills/shuffles natively; batching exists purely for commit granularity.
+So unlike the reference's windows, which run one after another, the
+pending batches run concurrently, one driver thread each, and Spark's
+task slots bound how much work is in flight. A batch's ``wall_sec``
+therefore overlaps the other batches' and no longer sums to the stage-1
+wall. A batch that fails does not stop the others from committing; its
+error is re-raised once every batch has finished, and a re-run
+recomputes only the batches without a manifest. The final phase starts
+after every batch has committed.
 """
 
 from __future__ import annotations
@@ -22,8 +30,10 @@ from __future__ import annotations
 import json
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from spark_aknn.aknn import (
@@ -149,10 +159,7 @@ def checkpointed_aknn(
         else trn
     )
 
-    for b in range(num_batches):
-        mpath = os.path.join(workdir, f"manifest_stage1_{b}.json")
-        if os.path.exists(mpath):
-            continue  # committed by a previous run — resume skips it
+    def commit_batch(b: int) -> None:
         t0 = time.time()
         sel = F.pmod(F.col("stripe_id"), F.lit(num_batches)) == b
         out = stage1_local_topk(inp.filter(sel), trn_s1.filter(sel), k)
@@ -170,7 +177,7 @@ def checkpointed_aknn(
             .collect()
         )
         _write_json_atomic(
-            mpath,
+            os.path.join(workdir, f"manifest_stage1_{b}.json"),
             {
                 "batch": b,
                 "path": path,
@@ -186,6 +193,26 @@ def checkpointed_aknn(
             },
         )
 
+    # a batch whose manifest exists was committed by a previous run —
+    # resume skips it; the rest are submitted at once and Spark's task
+    # slots interleave their jobs. Each target is wrapped at submit time,
+    # so every thread runs under its own copy of the caller's local
+    # properties (job group, job description).
+    pending = [
+        b
+        for b in range(num_batches)
+        if not os.path.exists(os.path.join(workdir, f"manifest_stage1_{b}.json"))
+    ]
+    if pending:
+        with ThreadPoolExecutor(max_workers=len(pending)) as pool:
+            futures = [
+                pool.submit(inheritable_thread_target(spark)(commit_batch), b) for b in pending
+            ]
+        # leaving the pool waited for every batch, so a failure re-raised
+        # here has not stopped the others from committing
+        for f in futures:
+            f.result()
+
     stage1 = spark.read.parquet(os.path.join(workdir, "stage1"))
     final_manifest = os.path.join(workdir, "manifest_final.json")
     result_path = os.path.join(workdir, "result")
@@ -198,10 +225,18 @@ def checkpointed_aknn(
         trn_s2 = trn.join(F.broadcast(touched), ["stripe_id", "sub_id"], "left_semi")
         stage2 = stage2_exchange(frontier, trn_s2, k)
         result = merge_topk(flagged, stage2, k, dedup=margin_factor > 0)
-        result.write.mode("overwrite").parquet(result_path)
-        n = spark.read.parquet(result_path).count()
+        # the row count rides on the write itself: no second job
+        written = Observation("result")
+        result.observe(written, F.count(F.lit(1)).alias("rows")).write.mode(
+            "overwrite"
+        ).parquet(result_path)
         _write_json_atomic(
             final_manifest,
-            {"path": result_path, "rows": n, "wall_sec": time.time() - t0, "k": k},
+            {
+                "path": result_path,
+                "rows": written.get["rows"],
+                "wall_sec": time.time() - t0,
+                "k": k,
+            },
         )
     return spark.read.parquet(result_path)

@@ -100,14 +100,20 @@ def run_level(cpus: int, n: int, attempts: int = 2) -> dict:
     env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus))
     last = ""
     for a in range(attempts):
-        out = subprocess.run(
-            [sys.executable, "-c", JOB.format(repo=REPO, n=n)],
-            capture_output=True, text=True, env=env,
-            # scale the per-leg budget with n: 1800s was sized for <=20M;
-            # a 64M local[2] leg needs ~900s clean and this VM's 2-6x
-            # drift can triple that
-            timeout=max(1800, n // 12000),
-        )
+        try:
+            out = subprocess.run(
+                [sys.executable, "-c", JOB.format(repo=REPO, n=n)],
+                capture_output=True, text=True, env=env,
+                # scale the per-leg budget with n: 1800s was sized for <=20M;
+                # a 64M local[2] leg needs ~900s clean, and a 2-6x drift
+                # in host speed can triple that
+                timeout=max(1800, n // 12000),
+            )
+        except subprocess.TimeoutExpired as e:
+            # a wedged leg is a failed attempt like any other
+            last = f"timed out after {e.timeout}s"
+            print(f"level {cpus} attempt {a} {last}, retrying", file=sys.stderr)
+            continue
         for line in out.stdout.splitlines():
             if line.startswith("JSONRESULT "):
                 return json.loads(line[len("JSONRESULT "):])
