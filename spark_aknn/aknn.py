@@ -43,8 +43,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from spark_aknn.grid import Grid, assign_cells, assign_cells_margin, build_grid, cells_df
-from spark_aknn.stripes import auto_num_stripes
+from spark_aknn.grid import Grid, assign_cells, assign_cells_margin, cells_df, plan_grid
 from spark_aknn.sweep import window_topk
 
 _STAGE1_SCHEMA = (
@@ -392,7 +391,8 @@ def all_knn_join(
     """All-kNN join: (id,x,y) x (id,x,y) -> (input_id, rank, neighbor_id, dist_sq).
 
     num_stripes=0 picks round(sqrt(|T|)/sqrt(k)) like the reference
-    (AllKnnResultStripes.h:141-151).
+    (AllKnnResultStripes.h:141-151); grid.plan_grid plans the grid and
+    clamps any stripe count to QUANTILE_GRID // 2 (8192).
 
     split_on selects which side the stripe boundaries are computed on —
     "training" (default) or "input" — mirroring the reference's
@@ -422,28 +422,13 @@ def all_knn_join(
     split_side = training_points if split_on == "training" else input_points
     n_trn_known: int | None = None
     if grid is None:
-        # two cheap jobs: count+extent first, then a quantile sketch
-        # sized to the stripe count (a fixed 4096-point sketch was the
-        # single most expensive driver job of the whole operator)
-        from spark_aknn.grid import count_and_extent, quantile_sketch, sketch_resolution
-
-        n_t, x_extent = count_and_extent(split_side)
-        n_split = n_t
-        if num_stripes <= 0:
-            if split_on == "input":  # auto formula is defined on |T|
-                n_t = training_points.count()
-            num_stripes = auto_num_stripes(n_t, k, spark.sparkContext.defaultParallelism)
-        n_trn_known = n_t
-        sketch = quantile_sketch(split_side, "y", sketch_resolution(num_stripes))
-        grid = build_grid(
+        grid, n_trn_known = plan_grid(
             split_side,
+            k,
             num_stripes,
+            training=training_points if split_on == "input" else None,
             salt_factor=salt_factor,
-            sketch=sketch,
-            k=k,
-            x_extent=x_extent,
             margin_factor=margin_factor,
-            n_total=n_split,
         )
     cells = cells_df(spark, grid, margin_factor=margin_factor)
     cols = ["stripe_id", "sub_id", "id", "x", "y"]
@@ -519,14 +504,12 @@ def all_knn_join(
         n_frontier = sum(r["count"] for r in stats)
         # stage-2 task sizing must count BOTH cogroup sides: the
         # frontier queries and the training rows of the touched cells
-        # (estimated as the touched share of |T| — equal-count stripes
-        # make per-cell counts ~uniform). With an explicit caller grid
-        # |T| is unknown; cells bound the useful parallelism either way.
-        np2 = max(1, min(2 * par, len(stats)))
-        if n_trn_known is not None:
-            n_cells = sum(grid.num_subs(s) for s in range(grid.num_stripes))
-            est_trn = n_trn_known * len(stats) / max(1, n_cells)
-            np2 = max(1, min(np2, -(-int(n_frontier + est_trn) // 16384)))
+        # (estimated as the touched share of the planner's row count —
+        # equal-count stripes make per-cell counts ~uniform); cells bound
+        # the useful parallelism.
+        n_cells = sum(grid.num_subs(s) for s in range(grid.num_stripes))
+        est_trn = n_trn_known * len(stats) / max(1, n_cells)
+        np2 = max(1, min(2 * par, len(stats), -(-int(n_frontier + est_trn) // 16384)))
         if len(stats) <= 65536:
             ckey = F.col("stripe_id").cast("long") * F.lit(1 << 32) + F.col("sub_id")
             keys = [r["stripe_id"] * (1 << 32) + r["sub_id"] for r in stats]

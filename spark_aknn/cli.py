@@ -21,6 +21,7 @@ import argparse
 import json
 import sys
 
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from spark_aknn.aknn import all_knn_join
@@ -99,6 +100,8 @@ def main(argv: list[str] | None = None) -> None:
         inp = _load_points(spark, args.input, args.key)
         trn = _load_points(spark, args.training, args.key) if args.training else inp
 
+    # the row count rides on the output write itself: no second job
+    written = Observation("output")
     with metrics.timed("total"):
         if args.workdir:
             result = checkpointed_aknn(
@@ -106,14 +109,15 @@ def main(argv: list[str] | None = None) -> None:
                 num_stripes=args.num_stripes, salt_factor=args.salt_factor,
                 margin_factor=args.margin_factor,
             )
-            result.write.mode("overwrite").parquet(args.output)
         else:
             result = all_knn_join(
                 inp, trn, k=args.k, num_stripes=args.num_stripes,
                 salt_factor=args.salt_factor, margin_factor=args.margin_factor,
             )
-            result.write.mode("overwrite").parquet(args.output)
-    metrics.counters["output_rows"] = spark.read.parquet(args.output).count()
+        result.observe(written, F.count(F.lit(1)).alias("rows")).write.mode(
+            "overwrite"
+        ).parquet(args.output)
+    metrics.counters["output_rows"] = written.get["rows"]
     payload = metrics.to_json()
     if args.metrics:
         with open(args.metrics, "w") as f:

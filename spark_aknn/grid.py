@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_aknn.localrel import local_df
-from spark_aknn.stripes import assign_stripes, compute_splits
+from spark_aknn.stripes import assign_stripes, auto_num_stripes
 
 NEG_INF = float("-inf")
 POS_INF = float("inf")
@@ -56,18 +56,21 @@ class Grid:
         return out
 
 
-# ceiling on sketch resolution for boundary derivation; the resolution
+# ceiling on sketch resolution for boundary derivation. The resolution
 # actually used is ~2x the stripe count (quantile cost is linear in the
 # number of query points, so a fixed 4096-point sketch was paying
-# seconds per grid build that a 2S-point sketch gets for ~0.1s).
-# The ceiling covers auto stripe counts up to 8192, i.e. |T| up to
-# ~670M at k=10 — a 4096 cap forced n>=42M grids onto the exact-
-# quantile fallback, whose fixed 1e-3 rank error then fused 56% of the
-# 2530 boundaries at n=64M (measured: 2530 requested -> 1114 actual on
-# a UNIFORM corpus). approxQuantile's cost scales with the relative
-# error (summary size), not the probe count, so the higher ceiling
-# costs nothing below ~2048 stripes.
+# seconds per grid build that a 2S-point sketch gets for ~0.1s), and
+# stripe counts are clamped to half the ceiling, so every grid keeps >= 2
+# sketch gaps per stripe: 8192 stripes covers auto counts up to
+# |T| ~670M at k=10. approxQuantile's cost scales with the relative
+# error (summary size), not the probe count, so the high ceiling costs
+# nothing below ~2048 stripes; a 4096 ceiling had pushed n>=42M grids
+# onto an exact-quantile pass whose fixed 1e-3 rank error fused 56% of
+# the 2530 boundaries at n=64M (2530 requested -> 1114 actual on a
+# UNIFORM corpus).
 QUANTILE_GRID = 16384
+# most x-substripes a salted stripe is cut into
+MAX_SUBS = 32
 
 
 def count_and_extent(
@@ -91,8 +94,7 @@ def count_and_extent(
 
 
 def quantile_sketch(
-    df: DataFrame, col: str = "y", resolution: int = QUANTILE_GRID,
-    relative_error: float | None = None,
+    df: DataFrame, col: str = "y", resolution: int = QUANTILE_GRID
 ) -> list[float]:
     """Equal-mass quantile sketch of ``col`` at ``resolution`` gaps via
     DataFrame.approxQuantile (driver-merged Greenwald-Khanna summaries —
@@ -102,17 +104,15 @@ def quantile_sketch(
     resampling — the reference re-sorts per run
     (AllKnnResultStripes.h:52-84); we pay one aggregate instead.
 
-    relative_error defaults to 1/(4*resolution): the sketch's rank
-    error must stay well under the inter-point gap 1/resolution, or
-    adjacent quantile queries return the same sample value on large
-    corpora and boundaries spuriously FUSE (measured at 6M rows /
-    resolution 1550 with a fixed 1e-3 error: 775 stripes fused to 715
-    visibly-unequal ones)."""
+    The relative error is 1/(4*resolution): the sketch's rank error
+    must stay well under the inter-point gap 1/resolution, or adjacent
+    quantile queries return the same sample value on large corpora and
+    boundaries spuriously FUSE (measured at 6M rows / resolution 1550
+    with a fixed 1e-3 error: 775 stripes fused to 715 visibly-unequal
+    ones). An empty or all-null column gives an empty sketch."""
     resolution = max(2, min(int(resolution), QUANTILE_GRID))
-    if relative_error is None:
-        relative_error = 1.0 / (4 * resolution)
     probs = [i / resolution for i in range(1, resolution)]
-    return [float(v) for v in df.approxQuantile(col, probs, relative_error)]
+    return [float(v) for v in df.approxQuantile(col, probs, 1.0 / (4 * resolution))]
 
 
 def sketch_resolution(num_stripes: int) -> int:
@@ -121,15 +121,14 @@ def sketch_resolution(num_stripes: int) -> int:
 
 
 def count_and_quantile_sketch(
-    df: DataFrame, col: str = "y", x_col: str = "x", resolution: int | None = None
+    df: DataFrame, col: str = "y", x_col: str = "x"
 ) -> tuple[int, list[float], tuple[float, float] | None]:
-    """(row count, quantile sketch, x extent) — two cheap jobs. With no
-    explicit resolution it is sized at 2*sqrt(n): the auto stripe count
-    sqrt(|T|/k) is <= sqrt(n) for any k >= 1, so every caller stays on
-    the sketch path with >= 2 gaps per stripe."""
+    """(row count, quantile sketch, x extent) — two cheap jobs. The
+    sketch is sized at 2*sqrt(n): the auto stripe count sqrt(|T|/k) is
+    <= sqrt(n) for any k >= 1, so build_grid can use it as is, with >= 2
+    gaps per stripe, for whatever k the caller then picks."""
     n, extent = count_and_extent(df, x_col)
-    if resolution is None:
-        resolution = sketch_resolution(int(math.sqrt(max(n, 1))))
+    resolution = sketch_resolution(int(math.sqrt(max(n, 1))))
     sketch = quantile_sketch(df, col, resolution) if n else []
     return n, sketch, extent
 
@@ -208,12 +207,50 @@ def splits_from_sketch(
     return [NEG_INF, *inner, POS_INF]
 
 
+def plan_grid(
+    split_side: DataFrame,
+    k: int | None,
+    num_stripes: int = 0,
+    training: DataFrame | None = None,
+    salt_factor: float = 4.0,
+    margin_factor: float = 0.9,
+) -> tuple[Grid, int]:
+    """Plan the grid of an all-kNN join on ``split_side``'s points: the
+    one planning path behind every operator.
+
+    One count+extent aggregate, then the auto stripe count when
+    ``num_stripes`` <= 0 (the reference's sqrt(|T|/k); ``training`` is
+    counted for it when the split side is not the training side), the
+    clamp to QUANTILE_GRID // 2, one quantile sketch sized to the stripe
+    count, and build_grid with the anisotropy arguments.
+
+    Returns (grid, rows counted): |T| when ``training`` was counted,
+    else the split side's count."""
+    n, x_extent = count_and_extent(split_side)
+    n_counted = n
+    if num_stripes <= 0:
+        if training is not None:
+            n_counted = training.count()
+        par = split_side.sparkSession.sparkContext.defaultParallelism
+        num_stripes = auto_num_stripes(n_counted, k, par)
+    num_stripes = min(num_stripes, QUANTILE_GRID // 2)
+    grid = build_grid(
+        split_side,
+        num_stripes,
+        salt_factor=salt_factor,
+        sketch=quantile_sketch(split_side, "y", sketch_resolution(num_stripes)),
+        k=k,
+        x_extent=x_extent,
+        margin_factor=margin_factor,
+        n_total=n,
+    )
+    return grid, n_counted
+
+
 def build_grid(
     training: DataFrame,
     num_stripes: int,
     salt_factor: float = 4.0,
-    max_subs: int = 32,
-    relative_error: float = 0.001,
     sketch: list[float] | None = None,
     k: int | None = None,
     x_extent: tuple[float, float] | None = None,
@@ -223,61 +260,43 @@ def build_grid(
     """Quantile y-splits; oversized stripes (> salt_factor * mean count)
     get x-quantile substripes sized to bring them back to ~mean.
 
-    Scan economy: boundaries come from a quantile sketch (one scan, or
-    zero if the caller passes one). The per-stripe salt-count scan runs
-    ONLY when boundary fusion or the anisotropy merge signals skewed
-    data — with all distinct quantiles and no merging, equal-count
-    splits are balanced by construction.
+    One boundary path: ``num_stripes`` is clamped to QUANTILE_GRID // 2
+    and the boundaries are resampled from an equal-mass quantile sketch
+    with >= 2 gaps per stripe. A caller's sketch is used as is (zero
+    scans); with none, or one too coarse for the clamped stripe count,
+    the grid is planned afresh by plan_grid (one count+extent aggregate
+    and one sketch of ``training``). An empty sketch means a side with
+    no y values: one stripe. The per-stripe salt-count scan runs ONLY
+    when boundary fusion or the anisotropy merge signals skewed data —
+    with all distinct quantiles and no merging, equal-count splits are
+    balanced by construction.
 
     (k, x_extent, n_total): enables the anisotropy merge in
     splits_from_sketch — stripes tall enough that typical kth circles
     fit their own margin (see splits_from_sketch; exactness never
-    depends on it). Callers with a count_and_quantile_sketch result
-    should pass all three."""
-    if sketch is None and num_stripes < QUANTILE_GRID // 2:
-        n_total, sketch, xe = count_and_quantile_sketch(
-            training, "y", resolution=sketch_resolution(num_stripes)
-        )
-        if x_extent is None:
-            x_extent = xe
-    if sketch is None or 2 * num_stripes > len(sketch) + 1:
-        # sketch missing or too coarse for this stripe count — exact
-        # quantile pass. The rank error must stay well under the
-        # inter-boundary gap n/num_stripes or adjacent quantile queries
-        # return the same sample and boundaries spuriously fuse (the
-        # same failure quantile_sketch guards against; measured at
-        # n=64M / 2530 stripes with the fixed 1e-3 error: 1114
-        # visibly-unequal stripes survived)
-        y_splits = compute_splits(
+    depends on it). Callers passing their own sketch should pass all
+    three."""
+    num_stripes = min(num_stripes, QUANTILE_GRID // 2)
+    if sketch is None or (sketch and 2 * num_stripes > len(sketch) + 1):
+        grid, _ = plan_grid(
             training,
+            k,
             num_stripes,
-            col="y",
-            relative_error=min(relative_error, 1.0 / (4 * num_stripes)),
-        )
-        sketch = y_splits[1:-1]  # equal-count boundaries ARE an equal-mass sketch
-        if k is not None and x_extent is not None and n_total:
-            # apply the anisotropy merge to the exact boundaries: every
-            # gap holds ~n/num_stripes mass
-            y_splits = splits_from_sketch(
-                sketch,
-                num_stripes,
-                n=n_total,
-                k=k,
-                x_extent=x_extent,
-                margin_factor=margin_factor,
-            )
-    else:
-        y_splits = splits_from_sketch(
-            sketch,
-            num_stripes,
-            n=n_total,
-            k=k,
-            x_extent=x_extent,
+            salt_factor=salt_factor,
             margin_factor=margin_factor,
         )
+        return grid
+    y_splits = splits_from_sketch(
+        sketch,
+        num_stripes,
+        n=n_total,
+        k=k,
+        x_extent=x_extent,
+        margin_factor=margin_factor,
+    )
     grid = Grid(y_splits=y_splits)
     actual = len(y_splits) - 1
-    fused = actual < min(num_stripes, QUANTILE_GRID)
+    fused = actual < num_stripes
     if actual <= 1 or salt_factor <= 0 or not fused:
         return grid
     # per-stripe masses estimated DRIVER-SIDE from the equal-mass sketch
@@ -295,7 +314,7 @@ def build_grid(
     if not hot:
         return grid
     striped = assign_stripes(training, y_splits, col="y", out="stripe_id")
-    probs_per_stripe = {s: min(max_subs, max(2, int(round(c / mean)))) for s, c in hot.items()}
+    probs_per_stripe = {s: min(MAX_SUBS, max(2, int(round(c / mean)))) for s, c in hot.items()}
     hot_df = striped.filter(F.col("stripe_id").isin(list(hot.keys())))
     # one aggregation pass: per-stripe x-quantiles via percentile_approx
     max_n = max(probs_per_stripe.values())

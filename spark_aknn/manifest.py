@@ -43,8 +43,7 @@ from spark_aknn.aknn import (
     stage2_exchange,
     with_escape_flag,
 )
-from spark_aknn.grid import Grid, assign_cells, assign_cells_margin, build_grid, cells_df
-from spark_aknn.stripes import auto_num_stripes
+from spark_aknn.grid import Grid, assign_cells, assign_cells_margin, cells_df, plan_grid
 
 
 def _write_json_atomic(path: str, obj: dict) -> None:
@@ -128,21 +127,12 @@ def checkpointed_aknn(
     }
     grid = load_grid(workdir, params=params)
     if grid is None:
-        from spark_aknn.grid import count_and_extent, quantile_sketch, sketch_resolution
-
-        n_t, x_extent = count_and_extent(training_points)
-        if num_stripes <= 0:
-            num_stripes = auto_num_stripes(n_t, k, spark.sparkContext.defaultParallelism)
-        sketch = quantile_sketch(training_points, "y", sketch_resolution(num_stripes))
-        grid = build_grid(
+        grid, _ = plan_grid(
             training_points,
+            k,
             num_stripes,
             salt_factor=salt_factor,
-            sketch=sketch,
-            k=k,
-            x_extent=x_extent,
             margin_factor=margin_factor,
-            n_total=n_t,
         )
         save_grid(workdir, grid, params=params)
 

@@ -1,16 +1,13 @@
 """Run metrics — the Spark analogue of the reference's results CSV
 (/root/reference/PlaneSweepParallel/src/PlaneSweepParallel.cpp:296-345:
-per-algorithm durations + heap-addition min/max/avg/total + stripe and
-pending-point counters)."""
+per-algorithm durations and counters). Only values a run already has
+are recorded: a counter never costs its own Spark job."""
 
 from __future__ import annotations
 
 import json
 import time
 from contextlib import contextmanager
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 class RunMetrics:
@@ -23,18 +20,6 @@ class RunMetrics:
         t0 = time.time()
         yield
         self.timings[name] = self.timings.get(name, 0.0) + (time.time() - t0)
-
-    def scan_stats(self, stage1: DataFrame) -> None:
-        """min/max/avg/total candidate evaluations — parity with the
-        reference's heap-addition statistics (AllKnnResult.h:236-268)."""
-        row = stage1.agg(
-            F.min("scanned").alias("scanned_min"),
-            F.max("scanned").alias("scanned_max"),
-            F.avg("scanned").alias("scanned_avg"),
-            F.sum("scanned").alias("scanned_total"),
-            F.count(F.lit(1)).alias("n_queries"),
-        ).collect()[0]
-        self.counters.update({k: float(v) for k, v in row.asDict().items()})
 
     def to_json(self) -> str:
         return json.dumps({"timings_sec": self.timings, "counters": self.counters}, indent=1)

@@ -10,13 +10,15 @@ Reference semantics being re-expressed (NOT ported):
     (AllKnnResultStripes.h:141-151).
 
 Spark-first design notes:
-  * Boundaries are computed with ``approxQuantile`` — at 100 TB an exact
-    equal-count split would itself be a full sort; approximate boundaries
-    are safe because the boundary-exchange stage (exchange.py) makes the
-    join result correct for ANY partitioning. Boundaries only steer
-    balance, not correctness (the reference needs its exact duplicate-y
-    fusion rule only because its stripes must reproduce bit-equal
-    outputs across variants; our differential tests cover that instead).
+  * Boundaries come from one ``approxQuantile`` sketch
+    (grid.quantile_sketch) — at 100 TB an exact equal-count split would
+    itself be a full sort; approximate boundaries are safe because the
+    boundary-exchange stage (aknn.build_frontier / aknn.stage2_exchange)
+    makes the join result correct for ANY partitioning. Boundaries only
+    steer balance, not correctness (the reference needs its exact
+    duplicate-y fusion rule only because its stripes must reproduce
+    bit-equal outputs across variants; our differential tests cover that
+    instead).
   * Stripe assignment uses pyspark.ml Bucketizer: JVM-side binary search
     per row (O(log S)), no Python, works for the 3 columns we bucketize
     (y, y-r, y+r) with one shared splits array.
@@ -28,9 +30,6 @@ import math
 
 from pyspark.ml.feature import Bucketizer
 from pyspark.sql import DataFrame
-
-NEG_INF = float("-inf")
-POS_INF = float("inf")
 
 
 def auto_num_stripes(training_count: int, k: int, parallelism: int = 32) -> int:
@@ -54,32 +53,6 @@ def auto_num_stripes(training_count: int, k: int, parallelism: int = 32) -> int:
         return 1
     s = int(round(math.sqrt(training_count / k)))
     return max(1, min(training_count, max(parallelism, s)))
-
-
-def compute_splits(
-    df: DataFrame,
-    num_stripes: int,
-    col: str = "y",
-    relative_error: float = 0.001,
-) -> list[float]:
-    """Equal-count quantile boundaries on ``col``; returns a strictly
-    increasing Bucketizer splits array [-inf, b1..b_{S-1}, +inf].
-
-    Duplicate quantile values are fused (the analogue of the reference's
-    duplicate-y rule, AllKnnResultStripes.h:205-208): a run of equal
-    boundaries collapses to one, so heavily duplicated y values land in
-    a single (possibly oversized) stripe, which AQE skew handling and
-    the kernel's internal chunking then absorb.
-    """
-    if num_stripes <= 1:
-        return [NEG_INF, POS_INF]
-    probs = [i / num_stripes for i in range(1, num_stripes)]
-    qs = df.approxQuantile(col, probs, relative_error)
-    inner: list[float] = []
-    for q in qs:
-        if not inner or q > inner[-1]:
-            inner.append(q)
-    return [NEG_INF, *inner, POS_INF]
 
 
 def assign_stripes(df: DataFrame, splits: list[float], col: str = "y", out: str = "stripe_id") -> DataFrame:
@@ -121,6 +94,3 @@ def assign_stripes_multi(
         df = df.withColumn(o, F.col(o + "__d").cast("int")).drop(o + "__d")
     return df
 
-
-def num_stripes_of(splits: list[float]) -> int:
-    return len(splits) - 1

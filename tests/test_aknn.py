@@ -92,22 +92,74 @@ def test_salted_grid_matches(spark, rng):
 
 
 def test_exact_split_error_tracks_stripe_count(spark, rng):
-    """build_grid's exact-quantile fallback (sketch too coarse for the
-    stripe count) must tighten approxQuantile's relative error below
-    1/num_stripes, or adjacent boundary queries return the same sample
-    and boundaries spuriously fuse whenever eps > 1/S — independent of
-    n (measured at n=64M/S=2530 with the old fixed 1e-3: 1114 of 2530
-    stripes survived on a UNIFORM corpus)."""
+    """A sketch too coarse for the stripe count makes build_grid draw a
+    fresh one sized to it, whose rank error stays below the gap between
+    boundaries; otherwise adjacent boundary queries return the same
+    sample and boundaries spuriously fuse whenever eps > 1/S —
+    independent of n (measured at n=64M/S=2530 with a fixed 1e-3: 1114
+    of 2530 stripes survived on a UNIFORM corpus)."""
     n, stripes = 100_000, 2000
     ids = np.arange(1, n + 1)
     x, y = _uniform(rng, n), _uniform(rng, n)
     pts = make_points_df(spark, ids, x, y)
-    # a deliberately too-coarse sketch forces the exact-quantile path
     coarse = [i / 100 for i in range(1, 100)]
     grid = build_grid(pts, stripes, salt_factor=0, sketch=coarse)
     assert grid.num_stripes >= 0.95 * stripes, (
         f"boundary fusion on uniform data: {grid.num_stripes}/{stripes}"
     )
+
+
+def test_explicit_stripe_count_clamps_without_fusion(spark, rng):
+    """Stripe counts above QUANTILE_GRID // 2 are clamped to it, where
+    the sketch still has >= 2 gaps per stripe: the grid is the clamp's
+    full stripe count, with no boundary fused."""
+    from spark_aknn.grid import QUANTILE_GRID, plan_grid
+
+    n = 100_000
+    ids = np.arange(1, n + 1)
+    pts = make_points_df(spark, ids, _uniform(rng, n), _uniform(rng, n))
+    assert build_grid(pts, 20_000, salt_factor=0).num_stripes == QUANTILE_GRID // 2
+    grid, counted = plan_grid(pts, None, 20_000, salt_factor=0)
+    assert grid.num_stripes == QUANTILE_GRID // 2
+    assert counted == n
+
+
+def test_both_operators_plan_the_same_grid(spark, rng, tmp_path, monkeypatch):
+    """all_knn_join and checkpointed_aknn plan through the one planner
+    and get the same grid for the same input: the one all_knn_join uses,
+    the one the checkpointed join commits to grid.json, and the one a
+    direct plan_grid call returns."""
+    import json
+
+    from spark_aknn import aknn, grid as grid_mod, manifest
+
+    n = 3000
+    ids = np.arange(1, n + 1)
+    # y-skewed so the anisotropy merge shapes the grid
+    pts = make_points_df(spark, ids, _uniform(rng, n), _uniform(rng, n) ** 3).persist()
+    planned = []
+
+    def recording(*args, **kw):
+        out = grid_mod.plan_grid(*args, **kw)
+        planned.append(out[0])
+        return out
+
+    monkeypatch.setattr(aknn, "plan_grid", recording)
+    monkeypatch.setattr(manifest, "plan_grid", recording)
+    aknn.all_knn_join(pts, pts, k=5).count()
+    manifest.checkpointed_aknn(spark, pts, pts, str(tmp_path / "ck"), k=5).count()
+    aknn.release_cached()
+    assert len(planned) == 2
+    with open(tmp_path / "ck" / "grid.json") as f:
+        committed = json.load(f)
+    direct, counted = grid_mod.plan_grid(pts, 5)
+    assert counted == n
+    for g in planned:
+        assert g.y_splits == direct.y_splits
+        assert g.x_splits == direct.x_splits
+    assert committed["y_splits"] == direct.y_splits
+    assert {int(s): v for s, v in committed["x_splits"].items()} == direct.x_splits
+    pts.unpersist()
 
 
 def test_clustered_zipf_differential(spark):

@@ -89,26 +89,3 @@ def test_polygon_tile_cover(spark):
     # the [0,0.5)^2 square covers exactly the 4x4 low corner of an 8x8 grid
     assert len(cover) == 16
     assert set(cover.tile_id) == {ty * 8 + tx for ty in range(4) for tx in range(4)}
-
-
-def test_catalog_shim(spark, tmp_path):
-    """Iceberg-or-parquet dispatch: parquet path round-trips; table refs
-    are honestly gated on the Iceberg runtime jar (absent here)."""
-    import pytest as _pytest
-
-    from spark_aknn.catalog import (
-        iceberg_available,
-        iceberg_session_conf,
-        load_table,
-        save_table,
-    )
-
-    conf = iceberg_session_conf("c1", "/tmp/wh")
-    assert conf["spark.sql.catalog.c1"].endswith("SparkCatalog")
-    df = spark.range(5).selectExpr("id", "id * 2 AS v")
-    path = str(tmp_path / "tbl")
-    save_table(df, path)
-    assert load_table(spark, path).count() == 5
-    if not iceberg_available(spark):
-        with _pytest.raises(NotImplementedError):
-            save_table(df, "iceberg:c1.db.t")

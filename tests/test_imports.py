@@ -1,0 +1,96 @@
+"""Every ``from spark_aknn... import name`` in the repo's scripts, tools,
+benchmark and tests resolves to a module or a top-level name of the
+package — read from source with ``ast``, no Spark needed — so deleting
+engine code cannot strand an importer."""
+
+from __future__ import annotations
+
+import ast
+import glob
+import os
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+IMPORTERS = ["tools", "perfbench", "tests", "spark_aknn"]
+SCRIPTS = ["bench.py", "bench_extra.py", "__spark_entry__.py"]
+
+
+def _module_file(module: str) -> str | None:
+    base = os.path.join(REPO, *module.split("."))
+    for path in (base + ".py", os.path.join(base, "__init__.py")):
+        if os.path.exists(path):
+            return path
+    return None
+
+
+def _parse(path: str) -> ast.Module:
+    with open(path) as f:
+        return ast.parse(f.read(), path)
+
+
+def _top_level_names(path: str) -> set[str]:
+    names: set[str] = set()
+    for node in _parse(path).body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            names.add(node.name)
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            names.update((a.asname or a.name).split(".")[0] for a in node.names)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            for t in targets:
+                names.update(n.id for n in ast.walk(t) if isinstance(n, ast.Name))
+    return names
+
+
+def _importer_files() -> list[str]:
+    files = [os.path.join(REPO, s) for s in SCRIPTS]
+    for d in IMPORTERS:
+        files += glob.glob(os.path.join(REPO, d, "**", "*.py"), recursive=True)
+    return sorted(files)
+
+
+def _engine_imports() -> list[tuple[str, int, str, str | None]]:
+    """(file, line, module, name) for every engine import; name is None
+    for a plain ``import spark_aknn...``."""
+    out = []
+    for path in _importer_files():
+        rel = os.path.relpath(path, REPO)
+        for node in ast.walk(_parse(path)):
+            if isinstance(node, ast.ImportFrom) and (node.module or "").startswith("spark_aknn"):
+                out += [(rel, node.lineno, node.module, a.name) for a in node.names]
+            elif isinstance(node, ast.Import):
+                out += [
+                    (rel, node.lineno, a.name, None)
+                    for a in node.names
+                    if a.name.split(".")[0] == "spark_aknn"
+                ]
+    return out
+
+
+def test_engine_imports_resolve():
+    imports = _engine_imports()
+    assert {"spark_aknn.aknn", "spark_aknn.grid", "spark_aknn.manifest"} <= {
+        m for _, _, m, _ in imports
+    }
+    stranded = []
+    for path, line, module, name in imports:
+        module_file = _module_file(module)
+        if module_file is None:
+            stranded.append(f"{path}:{line}: no module {module}")
+        elif name is not None and not (
+            name in _top_level_names(module_file) or _module_file(f"{module}.{name}")
+        ):
+            stranded.append(f"{path}:{line}: {module} has no {name}")
+    assert not stranded, "\n".join(stranded)
+
+
+def test_join_keeps_the_defaults_perfbench_reads():
+    """perfbench reads these two defaults off all_knn_join's signature."""
+    tree = _parse(_module_file("spark_aknn.aknn"))
+    fn = next(
+        n for n in tree.body if isinstance(n, ast.FunctionDef) and n.name == "all_knn_join"
+    )
+    positional = fn.args.args[len(fn.args.args) - len(fn.args.defaults):]
+    defaults = dict(zip([a.arg for a in positional], fn.args.defaults))
+    defaults.update(zip([a.arg for a in fn.args.kwonlyargs], fn.args.kw_defaults))
+    for name in ("margin_factor", "eager_stats_max_rows"):
+        assert isinstance(defaults.get(name), ast.Constant), name
