@@ -71,6 +71,9 @@ class Grid:
 QUANTILE_GRID = 16384
 # most x-substripes a salted stripe is cut into
 MAX_SUBS = 32
+# how many times the expected kth radius a stripe's margin must cover
+# for the anisotropy merge (splits_from_sketch) to leave it unmerged
+ANISOTROPY_SAFETY = 1.3
 
 
 def count_and_extent(
@@ -120,19 +123,6 @@ def sketch_resolution(num_stripes: int) -> int:
     return min(QUANTILE_GRID, max(64, 2 * num_stripes))
 
 
-def count_and_quantile_sketch(
-    df: DataFrame, col: str = "y", x_col: str = "x"
-) -> tuple[int, list[float], tuple[float, float] | None]:
-    """(row count, quantile sketch, x extent) — two cheap jobs. The
-    sketch is sized at 2*sqrt(n): the auto stripe count sqrt(|T|/k) is
-    <= sqrt(n) for any k >= 1, so build_grid can use it as is, with >= 2
-    gaps per stripe, for whatever k the caller then picks."""
-    n, extent = count_and_extent(df, x_col)
-    resolution = sketch_resolution(int(math.sqrt(max(n, 1))))
-    sketch = quantile_sketch(df, col, resolution) if n else []
-    return n, sketch, extent
-
-
 def _stripe_gap_masses(sketch: list[float], y_splits: list[float]) -> list[float]:
     """Relative per-stripe masses: sketch gaps falling in each stripe
     [b_i, b_{i+1}). Each gap carries equal mass, so these are row counts
@@ -155,7 +145,6 @@ def splits_from_sketch(
     k: int | None = None,
     x_extent: tuple[float, float] | None = None,
     margin_factor: float = 0.9,
-    safety: float = 1.3,
 ) -> list[float]:
     """Equal-count boundaries resampled from the sketch; duplicate
     boundaries fuse (the duplicate-y rule analogue,
@@ -164,21 +153,22 @@ def splits_from_sketch(
     With (n, k, x_extent) given, boundaries additionally satisfy the
     ANISOTROPY condition: each stripe's height h and count c obey
 
-        margin_factor*h >= safety * E[kth radius] ~ sqrt(k*h*Wx/(pi*c))
-        <=>  h*c >= safety^2 * k * Wx / (margin_factor^2 * pi)
+        margin_factor*h >= s * E[kth radius] ~ sqrt(k*h*Wx/(pi*c))
+        <=>  h*c >= s^2 * k * Wx / (margin_factor^2 * pi)
 
-    i.e. the stripe is tall enough that a typical query's kth circle
-    fits inside its own margin. For isotropic uniform data the plain
-    equal-count split at the reference's sqrt(n/k) count satisfies this
-    with slack (h*c = k vs a bound of ~0.66k), so uniform grids are
-    unchanged; for y-crushed distributions (heavy-tailed y, all-x mass
-    in a thin band) the equal-count stripes in the dense band are far
-    thinner than the 2-D kth radius — measured at n=10^6 zipf(1.5):
-    78.9% of queries escaped and the frontier exploded to 38.9M rows
-    (~49 target stripes per escaping query), turning stage 2 into an
-    hour-long sort spill at 8M. Greedy forward merge of the equal-mass
-    sketch gaps restores margin containment; the boundary exchange
-    stays exact either way — this is purely a cost bound."""
+    with s = ANISOTROPY_SAFETY, i.e. the stripe is tall enough that a
+    typical query's kth circle fits inside its own margin. For isotropic
+    uniform data the plain equal-count split at the reference's
+    sqrt(n/k) count satisfies this with slack (h*c = k vs a bound of
+    ~0.66k), so uniform grids are unchanged; for y-crushed distributions
+    (heavy-tailed y, all-x mass in a thin band) the equal-count stripes
+    in the dense band are far thinner than the 2-D kth radius —
+    measured at n=10^6 zipf(1.5): 78.9% of queries escaped and the
+    frontier exploded to 38.9M rows (~49 target stripes per escaping
+    query), turning stage 2 into an hour-long sort spill at 8M. Greedy
+    forward merge of the equal-mass sketch gaps restores margin
+    containment; the boundary exchange stays exact either way — this is
+    purely a cost bound."""
     if num_stripes <= 1 or not sketch:
         return [NEG_INF, POS_INF]
     m = len(sketch) + 1
@@ -190,7 +180,7 @@ def splits_from_sketch(
             if not inner or q > inner[-1]:
                 inner.append(q)
         return [NEG_INF, *inner, POS_INF]
-    beta = (safety**2) * k * wx / ((margin_factor**2 if margin_factor > 0 else 1.0) * math.pi)
+    beta = (ANISOTROPY_SAFETY**2) * k * wx / ((margin_factor**2 if margin_factor > 0 else 1.0) * math.pi)
     target = n / num_stripes
     mass_q = n / m  # mass of each sketch gap (and of each open tail)
     inner = []

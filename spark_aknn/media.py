@@ -169,13 +169,6 @@ def synth_pixels_batch(seeds: np.ndarray, w: int, h: int) -> np.ndarray:
     return (vals & np.uint64(0xFF)).astype(np.uint8).reshape(len(seeds), h, w, 3)
 
 
-def resize_nearest(arr: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
-    h, w = arr.shape[:2]
-    ys = (np.arange(out_h) * h // out_h).clip(0, h - 1)
-    xs = (np.arange(out_w) * w // out_w).clip(0, w - 1)
-    return arr[ys][:, xs]
-
-
 def average_phash(arr: np.ndarray) -> int:
     """64-bit average hash: grayscale -> 8x8 block means -> bit per cell
     (sign vs overall mean). Signed-int64 bit pattern (Spark LongType)."""
@@ -242,22 +235,3 @@ def decode_invariants(images: DataFrame) -> DataFrame:
             )
 
     return images.mapInPandas(batches, _STATS_SCHEMA)
-
-
-_THUMB_SCHEMA = "image_id string, thumb binary, tw int, th int"
-
-
-def thumbnails(images: DataFrame, size: int = 8) -> DataFrame:
-    """Feature-extraction plumbing: fixed-size nearest-neighbor thumbs."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for img_id, buf, w, h, fmt in zip(
-                pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"]
-            ):
-                arr = decode_image(buf, w, h, fmt)
-                out.append((img_id, encode_raw(resize_nearest(arr, size, size)), size, size))
-            yield pd.DataFrame(out, columns=["image_id", "thumb", "tw", "th"])
-
-    return images.mapInPandas(batches, _THUMB_SCHEMA)

@@ -6,7 +6,7 @@ exchange) lifted to high dimensions with metric balls instead of
 rectangles:
 
   stage 0  centroids:  k-means-lite on a bounded deterministic sample
-                       (driver-side numpy on <= sample_size vectors —
+                       (driver-side numpy on ~32 vectors per centroid —
                        metadata-scale, like the grid's stripe
                        boundaries; NEVER the corpus)
   stage 1  local kNN:  every vector cogrouped with its home bucket ->
@@ -41,7 +41,6 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -67,20 +66,18 @@ _SALT_TOLERANCE = 2.0
 # a bucket lands well above target (same L2/DRAM discipline as the 2-D
 # sweep kernel's _ELEM_BUDGET)
 _GEMM_ELEM_BUDGET = 1 << 23
-# materialize persisted intermediates with one action before the
-# downstream query fans out: concurrent result/broadcast branches racing
-# on a cold cache re-run the producing kernel redundantly
-_EAGER_CACHE = True
+# fewest buckets the auto policy derives
+_MIN_CENTROIDS = 16
+# Lloyd iterations of the centroid training
+_LLOYD_ITERS = 4
 
 
-def auto_num_centroids(
-    n: int, target_bucket_rows: int = _TARGET_BUCKET_ROWS, min_centroids: int = 16
-) -> int:
+def auto_num_centroids(n: int, target_bucket_rows: int = _TARGET_BUCKET_ROWS) -> int:
     """Bucket count for an n-vector corpus: ceil(n / target rows),
-    floored at min_centroids. Keeps the per-bucket Arrow group and the
+    floored at _MIN_CENTROIDS. Keeps the per-bucket Arrow group and the
     in-task GEMM bounded as the corpus scales 100x — the policy the
     fixed default lacked."""
-    return max(min_centroids, -(-max(n, 1) // target_bucket_rows))
+    return max(_MIN_CENTROIDS, -(-max(n, 1) // target_bucket_rows))
 
 
 def _l2_exact_ltr(diff: np.ndarray) -> np.ndarray:
@@ -173,6 +170,14 @@ def _vec_matrix(col) -> np.ndarray:
     return flat.reshape(-1, d)
 
 
+def _stack_vectors(vecs) -> np.ndarray:
+    """Driver-collected vector column -> (n, d) float64 matrix; (0, 0)
+    when nothing was collected (an empty corpus)."""
+    if len(vecs) == 0:
+        return np.zeros((0, 0))
+    return np.stack(vecs.to_numpy()).astype(np.float64)
+
+
 _PA_VEC = {"float": pa.float32(), "double": pa.float64()}
 _NP_VEC = {"float": np.float32, "double": np.float64}
 
@@ -191,35 +196,31 @@ def train_centroids(
     num_centroids: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    sample_size: int | None = None,
-    iters: int = 4,
 ) -> np.ndarray:
     """k-means-lite centroids from a bounded deterministic sample.
 
-    The sample (<= sample_size vectors, xxhash64-ordered so it's stable
-    across partitionings) is the ONLY driver-side collect in the ANN
-    tier — bounded metadata, independent of corpus cardinality, exactly
-    like the 2-D grid's quantile sketch. Lloyd iterations run in numpy
-    on the sample; empty clusters re-seed deterministically.
+    The sample (<= max(4096, 32 * num_centroids) vectors, xxhash64-
+    ordered so it's stable across partitionings) is the ONLY driver-side
+    collect in the ANN tier — bounded metadata, independent of corpus
+    cardinality, exactly like the 2-D grid's quantile sketch.
+    _LLOYD_ITERS Lloyd iterations run in numpy on the sample; empty
+    clusters re-seed deterministically.
 
-    sample_size defaults to max(4096, 32 * num_centroids) so the sample
-    grows with the bucket count the auto policy derives (a fixed-4096
-    sample trains 15k centroids on < 1 vector each); it stays
+    The sample grows with the bucket count the auto policy derives (a
+    fixed-4096 sample trains 15k centroids on < 1 vector each); it stays
     metadata-scale — ~32 vectors per centroid regardless of corpus
-    cardinality."""
-    if sample_size is None:
-        sample_size = max(4096, 32 * num_centroids)
+    cardinality. An empty corpus gives zero centroids."""
     pdf = (
         corpus.select(id_col, vec_col)
         .withColumn("__h", F.xxhash64(F.col(id_col)))
         .orderBy("__h", id_col)
-        .limit(sample_size)
+        .limit(max(4096, 32 * num_centroids))
         .toPandas()
     )
-    smat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+    smat = _stack_vectors(pdf[vec_col])
     c = min(num_centroids, len(smat))
     cmat = smat[:c].copy()
-    for _ in range(iters):
+    for _ in range(_LLOYD_ITERS):
         # chunked assignment: the (sample, C) distance matrix is
         # (32C x C) under the auto policy — quadratic in C, so never
         # materialized whole (same budget as the executor kernels)
@@ -309,30 +310,13 @@ def _stage1_kernel(k: int, id_col: str, vec_col: str):
                 ("home", pa.int32()),
             ]
         )
+        # stage 1 cogroups the members with themselves, so a bucket with
+        # queries always has the same rows on the training side
         if qtbl.num_rows == 0:
             return schema.empty_table()
         q_ids = qtbl.column(id_col).to_numpy(zero_copy_only=False)
         qmat = _vec_matrix(qtbl.column(vec_col))
         bucket = key[0].as_py()
-        if ttbl.num_rows == 0:
-            n = len(q_ids)
-            empty_l = pa.ListArray.from_arrays(
-                pa.array(np.zeros(n + 1, dtype=np.int32)), pa.array([], type=pa.int64())
-            )
-            empty_d = pa.ListArray.from_arrays(
-                pa.array(np.zeros(n + 1, dtype=np.int32)), pa.array([], type=pa.float64())
-            )
-            return pa.Table.from_arrays(
-                [
-                    pa.array(q_ids, type=pa.int64()),
-                    _vec_list_array(qmat),
-                    pa.array(np.full(n, np.inf)),
-                    empty_l,
-                    empty_d,
-                    pa.array(np.full(n, bucket, dtype=np.int32)),
-                ],
-                schema=schema,
-            )
         t_ids = ttbl.column(id_col).to_numpy(zero_copy_only=False)
         tmat = _vec_matrix(ttbl.column(vec_col))
         nb_ids, nb_d = [], []
@@ -625,11 +609,10 @@ def all_pairs_l2_topk(
         )
     stage1 = stage1.persist()
     _CACHED.append(stage1)
-    if _EAGER_CACHE:
-        # materialize the cache before the downstream query fans out —
-        # its probe and merge branches otherwise race on the cold cache
-        # and run the stage-1 kernel redundantly
-        stage1.count()
+    # materialize the cache before the downstream query fans out — its
+    # probe and merge branches otherwise race on the cold cache and run
+    # the stage-1 kernel redundantly
+    stage1.count()
     probes = _probe_explode(stage1, bc_cr, "kth_dist_sq")
     stage2 = (
         probes.withColumnRenamed("bucket", "gbucket")
@@ -670,50 +653,6 @@ def _fresh_members(
     )
 
 
-def l2_topk_exact(
-    corpus: DataFrame,
-    queries_pdf: pd.DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact k-NN of a DRIVER-PROVIDED small query set (broadcast — the
-    legitimate broadcast case) against the distributed corpus. Returns
-    (query_id, rank, neighbor_id, dist_sq)."""
-    spark = corpus.sparkSession
-    q_ids = queries_pdf[id_col].to_numpy()
-    qmat = np.stack(queries_pdf[vec_col].to_numpy()).astype(np.float64)
-    bq = spark.sparkContext.broadcast((q_ids, qmat))
-
-    def partial(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qi, qm = bq.value
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_col].to_numpy()
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            out_q, out_n, out_d = [], [], []
-            for a, b, c in _topk_partial(qi, qm, ids, mat, k):
-                out_q.append(a)
-                out_n.append(b)
-                out_d.append(c)
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "dist_sq": np.concatenate(out_d),
-                }
-            )
-
-    partials = corpus.mapInPandas(partial, "query_id long, neighbor_id long, dist_sq double")
-    w = Window.partitionBy("query_id").orderBy("dist_sq", "neighbor_id")
-    return (
-        partials.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "dist_sq")
-    )
-
-
 def ivf_topk(
     corpus: DataFrame,
     k: int = 10,
@@ -749,7 +688,7 @@ def ivf_topk(
         if num_centroids is None:
             raise ValueError("deterministic IVF requires an explicit num_centroids")
         pdf = corpus.select(id_col, vec_col).orderBy(id_col).limit(num_centroids).toPandas()
-        cmat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+        cmat = _stack_vectors(pdf[vec_col])
     else:
         num_centroids = _resolve_num_centroids(
             corpus, num_centroids, target_bucket_rows, corpus_count

@@ -50,20 +50,6 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
-def _shingles(text_col: str, n: int):
-    words = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-    return F.when(F.size(words) < n, F.array(F.concat_ws(" ", words))).otherwise(
-        F.transform(
-            F.sequence(F.lit(0), F.size(words) - n),
-            lambda i: F.concat_ws(" ", F.slice(words, i + 1, n)),
-        )
-    )
-
-
-def with_shingles(df: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
-    return df.withColumn("shingles", F.array_distinct(_shingles(text_col, n)))
-
-
 def _rotl64(col, r: int):
     """Rotate a 64-bit long left by r bits — pure JVM bit ops (shifts on
     longs are bit operations, never ANSI-overflow)."""
@@ -270,10 +256,6 @@ def lsh_candidate_pairs(
     )
 
 
-# materialize persisted intermediates with one action before the
-# downstream query fans out (see ann._EAGER_CACHE)
-_EAGER_CACHE = True
-
 # Bounded persist registry (mirrors aknn.release_cached / ann._CACHED):
 # each minhash_dedup_pairs call releases the previous call's persisted
 # intermediates, so a long-running driver issuing many dedup calls holds
@@ -297,96 +279,49 @@ def minhash_dedup_pairs(
     n: int = 3,
     num_perm: int = 32,
     threshold: float = 0.8,
-    bands: int | None = None,
-    rows_per_band: int | None = None,
-    target_recall: float = 0.9,
     hash_family: str = "xxhash64",
-    verify: str = "arrays",
 ) -> DataFrame:
     """Candidate pairs with exact n-gram Jaccard >= threshold —
     (a, b, est_jaccard, jaccard).
 
-    Banding defaults to derive_banding(num_perm, threshold): recall on
-    pairs AT the threshold is >= target_recall by the LSH s-curve (pairs
-    well above the threshold approach recall 1).
+    Banding is derive_banding(num_perm, threshold): recall on pairs AT
+    the threshold is >= 0.9 by the LSH s-curve (pairs well above the
+    threshold approach recall 1).
 
-    ``verify`` selects how exact |A ∩ B| is computed for the
-    banding-bounded candidate set (both are exact and bit-identical;
-    see BENCH/MINHASH.md for the measured comparison — r3 verdict
-    What's-wrong #3 asked for the exploded form, and measurement sent
-    it back):
-
-      * 'arrays' (default): join both shingle-hash arrays per pair,
-        one JVM array_intersect each. Shuffle volume 2L packed values
-        per pair; fastest at every measured doc length (1.07s vs 2.5s
-        at 10^3-token docs) because packed arrays move ~3x cheaper per
-        element than exploded rows and array_intersect is one codegen
-        hash-probe loop.
-      * 'exploded': candidates join a's exploded (doc, hash) rows, a
-        second equi-join on (b, h) keeps the hashes-in-intersection,
-        a partial-aggregating count collapses them map-side. Shuffle
-        volume L ROWS per pair — half the elements but more bytes. No
-        single row ever exceeds ~24 bytes, so this is the escape hatch
-        for pathological documents (10^5+ tokens) whose 2L-value array
-        rows would strain frame/memory limits.
+    Exact |A ∩ B| for the banding-bounded candidate set: both
+    shingle-hash arrays are joined onto each pair and intersected with
+    one JVM array_intersect (a codegen hash-probe loop). Packed arrays
+    move ~3x cheaper per element than exploded (doc, hash) rows, so this
+    beat the exploded-rows verify at every measured document length,
+    10^5-token documents included (BENCH/MINHASH.md).
 
     Jaccard = n_inter / (|A| + |B| - n_inter); with hash_family='md5'
     the whole operator is bit-reproducible by the DuckDB twin
-    (minhash_duckdb_sql) under either strategy."""
-    if verify not in ("arrays", "exploded"):
-        raise ValueError(f"verify must be 'arrays' or 'exploded', got {verify!r}")
-    if bands is None or rows_per_band is None:
-        bands, rows_per_band = derive_banding(num_perm, threshold, target_recall)
-    if bands * rows_per_band > num_perm:
-        raise ValueError("bands * rows_per_band must be <= num_perm")
+    (minhash_duckdb_sql)."""
+    bands, rows_per_band = derive_banding(num_perm, threshold)
     release_cached()
     sigs = (
         minhash_signatures(df, text_col, n, num_perm, id_col=id_col, hash_family=hash_family)
         .persist()  # reused by banding and the verify joins
     )
     _CACHED.append(sigs)
-    if _EAGER_CACHE:
-        # materialize the cache once up front: the banding self-join and
-        # the verify joins otherwise launch their map stages concurrently
-        # on the cold cache and re-run the shingle+signature kernel up
-        # to 4x
-        sigs.count()
+    # materialize the cache once up front: the banding self-join and the
+    # verify joins otherwise launch their map stages concurrently on the
+    # cold cache and re-run the shingle+signature kernel up to 4x
+    sigs.count()
     cand = lsh_candidate_pairs(sigs, id_col, bands, rows_per_band)
     est = F.size(
         F.filter(F.arrays_zip("sig_a", "sig_b"), lambda z: z["sig_a"] == z["sig_b"])
     ) / F.lit(num_perm)
-    if verify == "arrays":
-        sv = sigs.select(
-            F.col(id_col), F.col("shingle_hashes").alias("sh"), F.col("signature").alias("sig")
-        )
-        joined = (
-            cand.join(sv.withColumnsRenamed({id_col: "a", "sh": "sh_a", "sig": "sig_a"}), "a")
-            .join(sv.withColumnsRenamed({id_col: "b", "sh": "sh_b", "sig": "sig_b"}), "b")
-            .withColumn("n_inter", F.size(F.array_intersect("sh_a", "sh_b")))
-        )
-        jac = F.col("n_inter") / (F.size("sh_a") + F.size("sh_b") - F.col("n_inter"))
-    else:
-        cand = cand.persist()  # feeds the intersection join AND the assembly
-        _CACHED.append(cand)
-        shr = sigs.select(F.col(id_col), F.explode("shingle_hashes").alias("h"))
-        inter = (
-            cand.join(shr.withColumnsRenamed({id_col: "a"}), "a")
-            .join(shr.withColumnsRenamed({id_col: "b"}), ["b", "h"])
-            .groupBy("a", "b")
-            .agg(F.count(F.lit(1)).alias("n_inter"))
-        )
-        sv = sigs.select(
-            F.col(id_col),
-            F.col("signature").alias("sig"),
-            F.size("shingle_hashes").alias("sz"),
-        )
-        joined = (
-            cand.join(inter, ["a", "b"], "left")
-            .withColumn("n_inter", F.coalesce(F.col("n_inter"), F.lit(0).cast("long")))
-            .join(sv.withColumnsRenamed({id_col: "a", "sig": "sig_a", "sz": "sz_a"}), "a")
-            .join(sv.withColumnsRenamed({id_col: "b", "sig": "sig_b", "sz": "sz_b"}), "b")
-        )
-        jac = F.col("n_inter") / (F.col("sz_a") + F.col("sz_b") - F.col("n_inter"))
+    sv = sigs.select(
+        F.col(id_col), F.col("shingle_hashes").alias("sh"), F.col("signature").alias("sig")
+    )
+    joined = (
+        cand.join(sv.withColumnsRenamed({id_col: "a", "sh": "sh_a", "sig": "sig_a"}), "a")
+        .join(sv.withColumnsRenamed({id_col: "b", "sh": "sh_b", "sig": "sig_b"}), "b")
+        .withColumn("n_inter", F.size(F.array_intersect("sh_a", "sh_b")))
+    )
+    jac = F.col("n_inter") / (F.size("sh_a") + F.size("sh_b") - F.col("n_inter"))
     return (
         joined.withColumn("est_jaccard", est)
         .withColumn("jaccard", jac)
@@ -402,9 +337,6 @@ def minhash_duckdb_sql(
     n: int = 3,
     num_perm: int = 32,
     threshold: float = 0.8,
-    bands: int | None = None,
-    rows_per_band: int | None = None,
-    target_recall: float = 0.9,
 ) -> str:
     """DuckDB twin of minhash_dedup_pairs(hash_family='md5') — the
     bit-exact correctness oracle (r2 verdict Missing #2: this replaces
@@ -414,8 +346,7 @@ def minhash_duckdb_sql(
     multiplies via HUGEINT limb arithmetic, verified bit-equal to the
     numpy kernel), band-slice candidate join, and the same est/jaccard
     arithmetic — so rows, est_jaccard and jaccard all hash-match."""
-    if bands is None or rows_per_band is None:
-        bands, rows_per_band = derive_banding(num_perm, threshold, target_recall)
+    bands, rows_per_band = derive_banding(num_perm, threshold)
     seeds = (
         np.arange(1, num_perm + 1, dtype=np.uint64) * np.uint64(0x9E3779B97F4A7C15)
     ) ^ np.uint64(0xD1B54A32D192ED03)

@@ -32,7 +32,7 @@ from pyspark.ml.feature import Bucketizer
 from pyspark.sql import DataFrame
 
 
-def auto_num_stripes(training_count: int, k: int, parallelism: int = 32) -> int:
+def auto_num_stripes(training_count: int, k: int, parallelism: int) -> int:
     """Auto stripe count = round(sqrt(|T|/k)), the reference's own
     formula (AllKnnResultStripes.h:141-151), floored at the parallelism
     level so every core gets work.

@@ -9,6 +9,8 @@ coordinates, exact distance ties, |T| < k, empty stripes, k=1.
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pytest
 
@@ -168,7 +170,7 @@ def test_clustered_zipf_differential(spark):
     heavy: salting MUST arm, as the campaign asserts at 8M) and zipf
     (heavy-tailed y), at k=10 and the reference's k=30
     (run_syntheticdata3.cmd:1)."""
-    from spark_aknn.grid import count_and_quantile_sketch
+    from spark_aknn.grid import count_and_extent, quantile_sketch, sketch_resolution
     from spark_aknn.point_tables import clustered_points, zipf_points
     from spark_aknn.stripes import auto_num_stripes
 
@@ -189,7 +191,8 @@ def test_clustered_zipf_differential(spark):
         ids = pdf.id.to_numpy()
         x, y = pdf.x.to_numpy(), pdf.y.to_numpy()
         for k in (10, 30):
-            n_t, sketch, xe = count_and_quantile_sketch(pts, "y")
+            n_t, xe = count_and_extent(pts)
+            sketch = quantile_sketch(pts, "y", sketch_resolution(math.isqrt(n_t)))
             stripes = auto_num_stripes(n_t, k, 8)
             grid = build_grid(pts, stripes, salt_factor=1.5, sketch=sketch)
             if family == "clustered":
@@ -220,14 +223,17 @@ def test_zipf_anisotropy_merge_bounds_escapes(spark):
         assign_cells,
         assign_cells_margin,
         cells_df,
-        count_and_quantile_sketch,
+        count_and_extent,
+        quantile_sketch,
+        sketch_resolution,
     )
     from spark_aknn.point_tables import zipf_points
     from spark_aknn.stripes import auto_num_stripes
 
     n = 50_000
     pts = zipf_points(spark, n).persist()
-    nt, sk, xe = count_and_quantile_sketch(pts)
+    nt, xe = count_and_extent(pts)
+    sk = quantile_sketch(pts, "y", sketch_resolution(math.isqrt(nt)))
     s0 = auto_num_stripes(nt, 10, 8)
     plain = build_grid(pts, s0, sketch=sk)
     merged = build_grid(pts, s0, sketch=sk, k=10, x_extent=xe, n_total=nt)

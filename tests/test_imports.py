@@ -94,3 +94,88 @@ def test_join_keeps_the_defaults_perfbench_reads():
     defaults.update(zip([a.arg for a in fn.args.kwonlyargs], fn.args.kw_defaults))
     for name in ("margin_factor", "eager_stats_max_rows"):
         assert isinstance(defaults.get(name), ast.Constant), name
+
+
+def _repo_files() -> list[str]:
+    """Every .py file of the repo, skipping hidden directories."""
+    out = []
+    for root, dirs, files in os.walk(REPO):
+        dirs[:] = [d for d in dirs if not d.startswith(".")]
+        out += [os.path.join(root, f) for f in files if f.endswith(".py")]
+    return sorted(out)
+
+
+def _public_defs() -> list[tuple[str, ast.FunctionDef | ast.ClassDef]]:
+    """(file, node) for every public top-level function or class of the
+    engine package."""
+    out = []
+    for path in glob.glob(os.path.join(REPO, "spark_aknn", "**", "*.py"), recursive=True):
+        for node in _parse(path).body:
+            if isinstance(node, (ast.FunctionDef, ast.ClassDef)) and not node.name.startswith("_"):
+                out.append((path, node))
+    return out
+
+
+def _referenced_names(tree: ast.Module, skip: tuple[int, int] | None = None) -> set[str]:
+    """Names, attribute names and import aliases in ``tree``, leaving out
+    the nodes inside the line span ``skip``."""
+    names = set()
+    for node in ast.walk(tree):
+        if skip and skip[0] <= getattr(node, "lineno", 0) <= skip[1]:
+            continue
+        if isinstance(node, ast.Name):
+            names.add(node.id)
+        elif isinstance(node, ast.Attribute):
+            names.add(node.attr)
+        elif isinstance(node, ast.alias):
+            names.add(node.name.split(".")[-1])
+    return names
+
+
+def test_every_public_engine_name_is_used():
+    """A public engine function or class that nothing in the repo names
+    outside its own definition is dead code: delete it, or call and
+    test it."""
+    trees = {path: _parse(path) for path in _repo_files()}
+    refs = {path: _referenced_names(tree) for path, tree in trees.items()}
+    unused = []
+    for path, node in _public_defs():
+        if any(node.name in r for p, r in refs.items() if p != path):
+            continue
+        own = _referenced_names(trees[path], (node.lineno, node.end_lineno))
+        if node.name not in own:
+            unused.append(f"{os.path.relpath(path, REPO)}:{node.lineno}: {node.name}")
+    assert not unused, "\n".join(unused)
+
+
+def test_keyword_arguments_name_engine_parameters():
+    """Every keyword any repo file passes to a public engine function is
+    one of its parameters, so deleting an option cannot strand a caller
+    that only the benchmark runs. Functions that share a name are
+    checked against the union of their parameters."""
+    params: dict[str, set[str] | None] = {}
+    for _, node in _public_defs():
+        if not isinstance(node, ast.FunctionDef):
+            continue
+        a = node.args
+        if a.kwarg is not None:
+            params[node.name] = None  # **kwargs takes any keyword
+        elif params.get(node.name, set()) is not None:
+            names = {p.arg for p in a.posonlyargs + a.args + a.kwonlyargs}
+            params[node.name] = params.get(node.name, set()) | names
+    stranded = []
+    for path in _repo_files():
+        for node in ast.walk(_parse(path)):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else f.attr if isinstance(f, ast.Attribute) else None
+            accepted = params.get(name)
+            if accepted is None:
+                continue
+            for kw in node.keywords:
+                if kw.arg is not None and kw.arg not in accepted:
+                    rel = os.path.relpath(path, REPO)
+                    stranded.append(f"{rel}:{node.lineno}: {name}({kw.arg}=)")
+    assert "minhash_dedup_pairs" in params and "all_knn_join" in params
+    assert not stranded, "\n".join(stranded)

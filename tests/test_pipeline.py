@@ -506,26 +506,6 @@ def test_derive_banding_threshold_driven():
     assert (b, r) == (16, 2)
 
 
-def test_minhash_verify_strategies_agree(spark):
-    """verify='arrays' (default, measured faster) and verify='exploded'
-    (bounded-row-width escape hatch — BENCH/MINHASH.md) are the same
-    exact operator: identical pairs AND identical float values."""
-    from spark_aknn.pipeline.dedup import minhash_dedup_pairs
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    a = (
-        minhash_dedup_pairs(docs, threshold=0.5, verify="arrays")
-        .toPandas().sort_values(["a", "b"]).reset_index(drop=True)
-    )
-    b = (
-        minhash_dedup_pairs(docs, threshold=0.5, verify="exploded")
-        .toPandas().sort_values(["a", "b"]).reset_index(drop=True)
-    )
-    assert len(a) > 0 and a.equals(b)
-    with pytest.raises(ValueError):
-        minhash_dedup_pairs(docs, verify="nope")
-
-
 def test_minhash_persist_registry_released(spark):
     """Repeated minhash_dedup_pairs calls must not accumulate persisted
     intermediates: each call releases the previous call's caches
@@ -534,17 +514,17 @@ def test_minhash_persist_registry_released(spark):
     from spark_aknn.pipeline import dedup
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    dedup.minhash_dedup_pairs(docs, threshold=0.5, verify="arrays").count()
+    dedup.minhash_dedup_pairs(docs, threshold=0.5).count()
     first = list(dedup._CACHED)
     assert len(first) == 1  # sigs persisted
     assert first[0].storageLevel.useMemory
     # different num_perm -> different analyzed plan, so the storage-level
     # lookup can't alias call 1's (unpersisted) plan to call 2's cache
-    dedup.minhash_dedup_pairs(docs, threshold=0.5, num_perm=16, verify="exploded").count()
+    dedup.minhash_dedup_pairs(docs, threshold=0.5, num_perm=16).count()
     for df in first:  # previous call's caches are gone
         assert not df.storageLevel.useMemory
-    assert len(dedup._CACHED) == 2  # sigs + cand (exploded mode)
-    assert all(df.storageLevel.useMemory for df in dedup._CACHED)
+    assert len(dedup._CACHED) == 1
+    assert dedup._CACHED[0].storageLevel.useMemory
     dedup.release_cached()
     assert not dedup._CACHED
 
@@ -711,6 +691,26 @@ def test_cosine_excludes_zero_vectors(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     got = cosine_near_dup_pairs(df, min_cosine=-1.0, num_centroids=2).toPandas()
     assert set(zip(got.a, got.b)) == {(1, 2)}
+
+
+def test_ann_operators_on_an_empty_corpus(emb):
+    """An empty corpus trains zero centroids and every ANN operator
+    returns zero rows with its documented schema."""
+    from spark_aknn.pipeline import ann
+
+    empty = emb.filter(F.col("vec_id") < 0)
+    topk = ["query_id", "rank", "neighbor_id", "dist_sq"]
+    calls = [
+        (ann.all_pairs_l2_topk(empty, k=5), topk),
+        (ann.ivf_topk(empty, k=5), topk),
+        (ann.ivf_topk(empty, k=5, num_centroids=4, deterministic=True), topk),
+        (ann.embedding_near_dup_pairs(empty, 0.5), ["a", "b", "dist_sq"]),
+        (ann.cosine_near_dup_pairs(empty, 0.9), ["a", "b", "cos_sim"]),
+    ]
+    for df, cols in calls:
+        assert df.columns == cols
+        assert df.count() == 0
+    ann.release_cached()
 
 
 def test_ivf_deterministic_matches_duckdb(spark):

@@ -92,14 +92,7 @@ def main():
                    "BatchEvalPython" not in p6))
     checks.append(("minhash: candidate generation is an equi-join (hash join on band keys), not a cross join",
                    "CartesianProduct" not in p6 and "BroadcastNestedLoopJoin" not in p6))
-    # both verify strategies are kept (BENCH/MINHASH.md): arrays is the
-    # measured-faster default; exploded bounds row width for 10^5+-token
-    # docs. Assert each produces its intended plan shape.
-    mh_ex = minhash_dedup_pairs(docs, threshold=0.5, verify="exploded")
-    p6b = plan_of(mh_ex)
-    checks.append(("minhash verify='exploded': no array payload (no array_intersect; exploded (doc,hash) equi-join)",
-                   "array_intersect" not in p6b and "explode(shingle_hashes" in p6b))
-    checks.append(("minhash verify='arrays' (default): single array_intersect, no shingle explode after banding",
+    checks.append(("minhash verify: single array_intersect, no shingle explode after banding",
                    "array_intersect" in p6))
 
     # 7. ANN exact top-k: bucketed cogroups, no corpus collect, scans

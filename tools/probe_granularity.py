@@ -28,8 +28,7 @@ from spark_aknn.session import get_spark, default_cpus
 from spark_aknn.points import lcg_x, lcg_y
 from spark_aknn.point_tables import clustered_points, zipf_points
 from spark_aknn.aknn import all_knn_join
-from spark_aknn.grid import build_grid, count_and_quantile_sketch
-from spark_aknn.stripes import auto_num_stripes
+from spark_aknn.grid import plan_grid
 
 cpus = default_cpus()
 spark = get_spark("granularity", shuffle_partitions={mult} * cpus)
@@ -40,8 +39,7 @@ if {family!r} == "clustered":
 else:
     pts = zipf_points(spark, {n}).persist()
 pts.count()
-nt, sk, xe = count_and_quantile_sketch(pts)
-grid = build_grid(pts, auto_num_stripes(nt, 10, cpus), sketch=sk, k=10, x_extent=xe, n_total=nt)
+grid, _ = plan_grid(pts, 10)
 times = []
 for rep in range(2):
     t0 = time.time(); all_knn_join(pts, pts, k=10, grid=grid).count(); times.append(time.time() - t0)

@@ -38,9 +38,8 @@ from pyspark.sql import functions as F
 from spark_aknn.session import get_spark, default_cpus
 from spark_aknn.points import lcg_x, lcg_y
 from spark_aknn.aknn import all_knn_join
-from spark_aknn.grid import build_grid, count_and_quantile_sketch
+from spark_aknn.grid import plan_grid
 from spark_aknn.raster import tile_histogram
-from spark_aknn.stripes import auto_num_stripes
 
 cpus = default_cpus()
 n = {n}
@@ -49,8 +48,7 @@ w = spark.range(2000).select((F.col("id")+1).alias("id"), lcg_x(F.col("id")).ali
 all_knn_join(w, w, k=5, num_stripes=max(2, cpus)).count()   # warm codegen/workers
 pts = spark.range(n).select((F.col("id")+1).alias("id"), lcg_x(F.col("id")).alias("x"), lcg_y(F.col("id")).alias("y")).persist()
 pts.count()
-nt, sk, xe = count_and_quantile_sketch(pts)
-grid = build_grid(pts, auto_num_stripes(nt, 10, cpus), sketch=sk, k=10, x_extent=xe, n_total=nt)
+grid, _ = plan_grid(pts, 10)
 knn_times, tile_times = [], []
 for rep in range(2):
     t0 = time.time(); all_knn_join(pts, pts, k=10, grid=grid).count(); knn_times.append(time.time() - t0)

@@ -26,7 +26,7 @@ sys.path.insert(0, REPO)
 from pyspark.sql import functions as F  # noqa: E402
 
 from spark_aknn.aknn import all_knn_join  # noqa: E402
-from spark_aknn.grid import build_grid, count_and_quantile_sketch  # noqa: E402
+from spark_aknn.grid import plan_grid  # noqa: E402
 from spark_aknn.points import lcg_x, lcg_y  # noqa: E402
 from spark_aknn.session import default_cpus, get_spark  # noqa: E402
 from spark_aknn.stripes import auto_num_stripes  # noqa: E402
@@ -45,17 +45,18 @@ def main() -> None:
         (F.col("id") + 1).alias("id"), lcg_x(F.col("id")).alias("x"), lcg_y(F.col("id")).alias("y")
     ).persist()
     pts.count()
-    _, sketch, _xe = count_and_quantile_sketch(pts)
 
     auto = auto_num_stripes(n, k, cpus)
     ref = max(1, round(math.sqrt(n / k)))  # reference formula, AllKnnResultStripes.h:141-151
     levels = sorted({max(2, auto // 4), max(2, auto // 2), auto, auto * 2, auto * 4, ref})
+    # plain equal-count grids (k=None: no anisotropy merge), planned
+    # once per level outside the timed joins
+    grids = {s: plan_grid(pts, None, s)[0] for s in levels}
     best: dict[int, float] = {}
     for _pass in range(2):
         for s in levels:
-            grid = build_grid(pts, s, sketch=sketch)
             t0 = time.time()
-            all_knn_join(pts, pts, k=k, grid=grid).count()
+            all_knn_join(pts, pts, k=k, grid=grids[s]).count()
             dt = time.time() - t0
             best[s] = min(best.get(s, float("inf")), dt)
             print(f"pass{_pass} stripes={s}: {dt:.1f}s", file=sys.stderr)
@@ -65,6 +66,7 @@ def main() -> None:
         "",
         f"all-kNN self-join, k={k}, n={n:,} uniform LCG points, local[{cpus}],",
         "prebuilt grid per level, interleaved twice, best-of-2.",
+        f"Reproduce: `python tools/run_stripe_sweep.py {n} {k}`.",
         "",
         f"auto = sqrt(|T|/k) = {auto} (spark_aknn/stripes.py, the reference's",
         f"own formula, AllKnnResultStripes.h:141-151; ref check = {ref}).",

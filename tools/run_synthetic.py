@@ -40,8 +40,7 @@ from spark_aknn.session import get_spark, default_cpus
 from spark_aknn.points import lcg_x, lcg_y
 from spark_aknn.point_tables import clustered_points, zipf_points
 from spark_aknn.aknn import all_knn_join
-from spark_aknn.grid import build_grid, count_and_quantile_sketch
-from spark_aknn.stripes import auto_num_stripes
+from spark_aknn.grid import plan_grid
 
 cpus = default_cpus()
 n = {n}
@@ -55,8 +54,7 @@ if family == "clustered":
 else:
     pts = zipf_points(spark, n).persist()
 pts.count()
-nt, sk, xe = count_and_quantile_sketch(pts)
-grid = build_grid(pts, auto_num_stripes(nt, k, cpus), sketch=sk, k=k, x_extent=xe, n_total=nt)
+grid, _ = plan_grid(pts, k)
 if family == "clustered":
     assert grid.x_splits, "quantized clustered data must fuse boundaries and salt"
 times = []
