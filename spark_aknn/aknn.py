@@ -303,17 +303,28 @@ def stage2_exchange(frontier: DataFrame, training_cells: DataFrame, k: int) -> D
     )
 
 
-def _explode_ranked(flagged: DataFrame) -> DataFrame:
+def _explode_ranked(flagged: DataFrame, id_col: str = "input_id") -> DataFrame:
     """Stage-1 arrays are (dist, id)-sorted: posexplode gives final
     ranks, no shuffle."""
     return flagged.select(
-        "input_id",
+        id_col,
         F.posexplode(F.arrays_zip(F.col("neighbor_ids"), F.col("dist_sqs"))).alias("pos", "z"),
     ).select(
-        "input_id",
+        id_col,
         (F.col("pos") + 1).alias("rank"),
         F.col("z.neighbor_ids").alias("neighbor_id"),
         F.col("z.dist_sqs").alias("dist_sq"),
+    )
+
+
+def _rank_topk(cands: DataFrame, k: int, id_col: str = "input_id") -> DataFrame:
+    """row_number() over (id_col; dist_sq, neighbor_id) <= k — the one
+    rank window (whole-stage codegen, no Python)."""
+    w = Window.partitionBy(id_col).orderBy("dist_sq", "neighbor_id")
+    return (
+        cands.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(id_col, "rank", "neighbor_id", "dist_sq")
     )
 
 
@@ -351,13 +362,7 @@ def merge_topk(
     allc = needy.unionByName(stage2)
     if dedup:
         allc = allc.distinct()
-    w = Window.partitionBy("input_id").orderBy("dist_sq", "neighbor_id")
-    merged = (
-        allc.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(*cols)
-    )
-    return done.unionByName(merged)
+    return done.unionByName(_rank_topk(allc, k))
 
 
 # The one persisted intermediate per all_knn_join call (stage-1 is read

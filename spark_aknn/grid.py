@@ -408,14 +408,8 @@ def assign_cells(df: DataFrame, grid: Grid) -> DataFrame:
     out = out.join(F.broadcast(bounds), "stripe_id", "left")
     return out.withColumn(
         "sub_id",
-        F.when(
-            F.col("xbounds").isNull(), F.lit(0)
-        ).otherwise(
-            F.aggregate(
-                "xbounds",
-                F.lit(0),
-                lambda acc, b: acc + F.when(F.col("x") >= b, F.lit(1)).otherwise(F.lit(0)),
-            )
+        F.when(F.col("xbounds").isNull(), F.lit(0)).otherwise(
+            _sub_fold(F.col("x"), F.col("xbounds"))
         ),
     ).drop("xbounds")
 

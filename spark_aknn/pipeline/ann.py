@@ -34,6 +34,19 @@ squared vector norms), and the exact recompute decides.
 
 ivf_topk is the approximate variant: same machinery, but queries probe
 a fixed `nprobe` nearest centroids instead of the exact ball test.
+
+The operators share one copy of each step:
+
+  * `_bucketed` — the bucketing prologue: centroids, the persisted home
+    assignment, salted sub-buckets (only the deterministic IVF keeps
+    its own smallest-id centroids and unsalted layout);
+  * `_ball_probe` — the one ball test, over (query_id, qvec, home, cap)
+    rows; near-dup probes with home = -1 and a constant cap;
+  * `_topk_partial` — the one top-k kernel: dense (n_q, min(k, n_t))
+    id and distance matrices;
+  * `_per_bucket` — the per-bucket cogroup against the members;
+  * the all-kNN join's `_explode_ranked` and `_rank_topk` for the final
+    ranks.
 """
 
 from __future__ import annotations
@@ -42,8 +55,10 @@ from collections.abc import Iterator
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from spark_aknn.aknn import _explode_ranked, _list_array, _np, _rank_topk
 
 # relative slack applied to ball-test comparisons; dwarfs float64 GEMM
 # and triangle-arithmetic rounding (~1e-13) while admitting only a
@@ -61,10 +76,10 @@ _TARGET_BUCKET_ROWS = 65536
 # sub-buckets — the ANN analogue of the grid salting skewed stripes
 # into x-substripes (grid.py:128-156)
 _SALT_TOLERANCE = 2.0
-# cap on any single GEMM d2 allocation inside the kernels: queries are
-# chunked so the (chunk, n_bucket) float64 matrix stays ~64 MB even if
-# a bucket lands well above target (same L2/DRAM discipline as the 2-D
-# sweep kernel's _ELEM_BUDGET)
+# cap on any single float64 allocation inside the kernels: queries are
+# chunked so the (chunk, n_bucket) GEMM matrix and the (chunk, 4k, d)
+# candidate block stay ~64 MB even if a bucket lands well above target
+# (same L2/DRAM discipline as the 2-D sweep kernel's _ELEM_BUDGET)
 _GEMM_ELEM_BUDGET = 1 << 23
 # fewest buckets the auto policy derives
 _MIN_CENTROIDS = 16
@@ -81,13 +96,14 @@ def auto_num_centroids(n: int, target_bucket_rows: int = _TARGET_BUCKET_ROWS) ->
 
 
 def _l2_exact_ltr(diff: np.ndarray) -> np.ndarray:
-    """Strict left-to-right sum of squares along axis 1 — the exact IEEE
-    op order of the unrolled SQL expression (l2_sql), so distances are
-    bit-identical to the DuckDB oracle. Vectorized over rows; the Python
-    loop is over the (small, fixed) dimensionality only."""
-    acc = diff[:, 0] * diff[:, 0]
-    for i in range(1, diff.shape[1]):
-        acc = acc + diff[:, i] * diff[:, i]
+    """Strict left-to-right sum of squares along the last axis — the
+    exact IEEE op order of the unrolled SQL expression (l2_sql), so
+    distances are bit-identical to the DuckDB oracle. Vectorized over
+    the leading axes; the Python loop is over the (small, fixed)
+    dimensionality only."""
+    acc = diff[..., 0] * diff[..., 0]
+    for i in range(1, diff.shape[-1]):
+        acc = acc + diff[..., i] * diff[..., i]
     return acc
 
 
@@ -97,6 +113,19 @@ def _gemm_d2(qmat: np.ndarray, mat: np.ndarray) -> np.ndarray:
         + (mat * mat).sum(axis=1)[None, :]
         - 2.0 * (qmat @ mat.T)
     )
+
+
+def _centroid_d2(mat: np.ndarray, cmat: np.ndarray, exact: bool) -> np.ndarray:
+    """(n, C) squared distances to the centroids. ``exact`` gives the
+    strict left-to-right distance a SQL twin reproduces, one centroid
+    at a time so the temporary stays (n, d) — an (n, C, d) broadcast
+    reaches GBs at the auto bucket counts; otherwise the faster GEMM."""
+    if not exact:
+        return _gemm_d2(mat, cmat)
+    d2 = np.empty((len(mat), len(cmat)))
+    for j in range(len(cmat)):
+        d2[:, j] = _l2_exact_ltr(mat - cmat[j])
+    return d2
 
 
 def _elementwise_d2(qmat: np.ndarray, cmat: np.ndarray) -> np.ndarray:
@@ -115,28 +144,28 @@ def _elementwise_d2(qmat: np.ndarray, cmat: np.ndarray) -> np.ndarray:
     return d2
 
 
-def _topk_partial(q_ids, qmat, ids, mat, k):
-    """Exact per-partition top-k. GEMM (|a|^2 + |b|^2 - 2ab) preselects a
-    4k candidate margin fast; winners are re-ranked by the exact
-    left-to-right distance so GEMM rounding can neither reorder nor
+def _topk_partial(qmat, ids, mat, k):
+    """Exact top-k of every query row against (ids, mat): dense
+    (n_q, min(k, n_t)) neighbor-id and distance matrices, each row
+    (distance, id)-sorted. GEMM (|a|^2 + |b|^2 - 2ab) preselects a 4k
+    candidate margin fast; the candidates are re-ranked by the exact
+    left-to-right distance, so GEMM rounding can neither reorder nor
     (thanks to the margin) exclude a true neighbor. Queries are chunked
-    so the d2 allocation never exceeds _GEMM_ELEM_BUDGET elements — the
-    full (n_q, n_t) matrix at a target-size bucket (65k x 65k) would be
-    tens of GB."""
-    kk = min(k, mat.shape[0])
-    margin = min(4 * k, mat.shape[0])
-    chunk = max(1, _GEMM_ELEM_BUDGET // max(1, mat.shape[0]))
-    rows = []
-    for s in range(0, len(q_ids), chunk):
-        d2 = _gemm_d2(qmat[s : s + chunk], mat)
-        part = np.argpartition(d2, margin - 1, axis=1)[:, :margin]
-        for ci in range(d2.shape[0]):
-            qi = s + ci
-            cand = part[ci]
-            exact = _l2_exact_ltr(qmat[qi][None, :] - mat[cand])
-            order = np.lexsort((ids[cand], exact))[:kk]
-            rows.append((np.repeat(q_ids[qi], kk), ids[cand][order], exact[order]))
-    return rows
+    so neither the d2 matrix nor the (chunk, 4k, d) candidate block
+    exceeds _GEMM_ELEM_BUDGET elements — the full (n_q, n_t) matrix at
+    a target-size bucket (65k x 65k) would be tens of GB."""
+    kk = min(k, len(mat))
+    margin = min(4 * k, len(mat))
+    out_ids = np.empty((len(qmat), kk), dtype=ids.dtype)
+    out_d = np.empty((len(qmat), kk))
+    for sl in _row_slices(len(qmat), max(len(mat), margin * mat.shape[1])):
+        cand = np.argpartition(_gemm_d2(qmat[sl], mat), margin - 1, axis=1)[:, :margin]
+        exact = _l2_exact_ltr(qmat[sl, None, :] - mat[cand])
+        cand_ids = ids[cand]
+        order = np.lexsort((cand_ids, exact), axis=1)[:, :kk]
+        out_ids[sl] = np.take_along_axis(cand_ids, order, axis=1)
+        out_d[sl] = np.take_along_axis(exact, order, axis=1)
+    return out_ids, out_d
 
 
 def _row_slices(n_rows: int, width: int):
@@ -264,18 +293,12 @@ def _assign_home(
             tbl = pa.Table.from_batches([rb])
             if tbl.num_rows == 0:
                 continue
-            ids = tbl.column(id_col).to_numpy(zero_copy_only=False)
+            ids = _np(tbl, id_col)
             mat = _vec_matrix(tbl.column(vec_col))
             home = np.empty(len(ids), dtype=np.int32)
             for sl in _row_slices(len(ids), cmat.shape[0]):
-                if exact_assign:
-                    d2 = np.stack(
-                        [_l2_exact_ltr(mat[sl] - cmat[j]) for j in range(cmat.shape[0])],
-                        axis=1,
-                    )
-                    home[sl] = d2.argmin(axis=1)  # ties -> lowest j
-                else:
-                    home[sl] = _gemm_d2(mat[sl], cmat).argmin(axis=1)
+                # argmin ties -> lowest j, as in the SQL twin
+                home[sl] = _centroid_d2(mat[sl], cmat, exact_assign).argmin(axis=1)
             diff = mat - cmat[home]
             dist_c = np.sqrt((diff * diff).sum(axis=1))
             yield pa.RecordBatch.from_arrays(
@@ -295,147 +318,119 @@ _STAGE1_SCHEMA = (
     "query_id long, qvec array<float>, kth_dist_sq double, "
     "neighbor_ids array<long>, dist_sqs array<double>, home int"
 )
+_STAGE1_PA = pa.schema(
+    [
+        ("query_id", pa.int64()),
+        ("qvec", pa.list_(pa.float32())),
+        ("kth_dist_sq", pa.float64()),
+        ("neighbor_ids", pa.list_(pa.int64())),
+        ("dist_sqs", pa.list_(pa.float64())),
+        ("home", pa.int32()),
+    ]
+)
 _STAGE2_SCHEMA = "query_id long, neighbor_id long, dist_sq double"
+_STAGE2_PA = pa.schema(
+    [("query_id", pa.int64()), ("neighbor_id", pa.int64()), ("dist_sq", pa.float64())]
+)
+_PAIRS_SCHEMA = "a long, b long, dist_sq double"
+_PAIRS_PA = pa.schema([("a", pa.int64()), ("b", pa.int64()), ("dist_sq", pa.float64())])
 
 
 def _stage1_kernel(k: int, id_col: str, vec_col: str):
     def kernel(key, qtbl: pa.Table, ttbl: pa.Table) -> pa.Table:
-        schema = pa.schema(
-            [
-                ("query_id", pa.int64()),
-                ("qvec", pa.list_(pa.float32())),
-                ("kth_dist_sq", pa.float64()),
-                ("neighbor_ids", pa.list_(pa.int64())),
-                ("dist_sqs", pa.list_(pa.float64())),
-                ("home", pa.int32()),
-            ]
-        )
         # stage 1 cogroups the members with themselves, so a bucket with
         # queries always has the same rows on the training side
         if qtbl.num_rows == 0:
-            return schema.empty_table()
-        q_ids = qtbl.column(id_col).to_numpy(zero_copy_only=False)
+            return _STAGE1_PA.empty_table()
         qmat = _vec_matrix(qtbl.column(vec_col))
-        bucket = key[0].as_py()
-        t_ids = ttbl.column(id_col).to_numpy(zero_copy_only=False)
-        tmat = _vec_matrix(ttbl.column(vec_col))
-        nb_ids, nb_d = [], []
-        for _, bids, bd in _topk_partial(q_ids, qmat, t_ids, tmat, k):
-            nb_ids.append(bids)
-            nb_d.append(bd)
-        counts = np.array([len(v) for v in nb_ids], dtype=np.int32)
-        kth = np.array(
-            [d[k - 1] if len(d) >= k else np.inf for d in nb_d], dtype=np.float64
+        nb_ids, nb_d = _topk_partial(
+            qmat, _np(ttbl, id_col), _vec_matrix(ttbl.column(vec_col)), k
         )
-        offs = np.zeros(len(q_ids) + 1, dtype=np.int32)
-        np.cumsum(counts, out=offs[1:])
+        n, kk = nb_d.shape
+        kth = nb_d[:, k - 1] if kk >= k else np.full(n, np.inf)
+        counts = np.full(n, kk, dtype=np.int32)
         return pa.Table.from_arrays(
             [
-                pa.array(q_ids, type=pa.int64()),
+                pa.array(_np(qtbl, id_col), type=pa.int64()),
                 _vec_list_array(qmat),
                 pa.array(kth),
-                pa.ListArray.from_arrays(
-                    pa.array(offs), pa.array(np.concatenate(nb_ids), type=pa.int64())
-                ),
-                pa.ListArray.from_arrays(
-                    pa.array(offs), pa.array(np.concatenate(nb_d), type=pa.float64())
-                ),
-                pa.array(np.full(len(q_ids), bucket, dtype=np.int32)),
+                _list_array(nb_ids.ravel(), counts, pa.int64()),
+                _list_array(nb_d.ravel(), counts, pa.float64()),
+                pa.array(np.full(n, key[0].as_py(), dtype=np.int32)),
             ],
-            schema=schema,
+            schema=_STAGE1_PA,
         )
 
     return kernel
 
 
-def _probe_explode(stage1: DataFrame, bc_cr, bound_col: str = "kth_dist_sq") -> DataFrame:
-    """Explode each query into the sub-buckets its ball test admits:
-    probe g iff d(q, c_parent(g)) - R_g <= sqrt(bound) * (1 + slack),
-    g != home. Broadcast (centroids, parent_of_g, radii_g); centroid
-    distances are computed once per PARENT and fanned out to its subs —
-    the flop cost stays O(n x C), not O(n x G)."""
-    out_schema = "bucket int, query_id long, qvec array<float>, cap double"
+def _stage2_kernel(k: int, id_col: str, vec_col: str):
+    def kernel(key, qtbl: pa.Table, ttbl: pa.Table) -> pa.Table:
+        if qtbl.num_rows == 0 or ttbl.num_rows == 0:
+            return _STAGE2_PA.empty_table()
+        nb_ids, nb_d = _topk_partial(
+            _vec_matrix(qtbl.column("qvec")),
+            _np(ttbl, id_col),
+            _vec_matrix(ttbl.column(vec_col)),
+            k,
+        )
+        keep = nb_d <= _np(qtbl, "cap")[:, None]  # inclusive: a tie can displace by id
+        qi = np.nonzero(keep)[0]
+        return pa.Table.from_arrays(
+            [
+                pa.array(_np(qtbl, "query_id")[qi], type=pa.int64()),
+                pa.array(nb_ids[keep], type=pa.int64()),
+                pa.array(nb_d[keep], type=pa.float64()),
+            ],
+            schema=_STAGE2_PA,
+        )
+
+    return kernel
+
+
+def _ball_probe(queries: DataFrame, bc, plan, vec_sql_type: str = "float") -> DataFrame:
+    """Explode each (query_id, qvec, home, cap) row into the sub-buckets
+    its ball test admits: probe g iff d(q, c_parent(g)) - R_g <=
+    sqrt(cap) * (1 + slack) and g != home (home = -1 excludes none).
+    ``bc`` broadcasts the centroids; (parent_of_g, radii_g) come from
+    the plan. Centroid distances are computed once per PARENT and
+    fanned out to its subs — the flop cost stays O(n x C), not
+    O(n x G). Output: (gbucket, query_id, qvec, cap)."""
+    bc_plan = queries.sparkSession.sparkContext.broadcast((plan.parent_of_g, plan.radii_g))
 
     def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        cmat, parent_of_g, radii_g = bc_cr.value
+        cmat = bc.value
+        parent_of_g, radii_g = bc_plan.value
         n_g = len(parent_of_g)
         for rb in it:
             tbl = pa.Table.from_batches([rb])
             if tbl.num_rows == 0:
                 continue
-            q_ids = tbl.column("query_id").to_numpy(zero_copy_only=False)
+            q_ids, home, cap = _np(tbl, "query_id"), _np(tbl, "home"), _np(tbl, "cap")
             qmat = _vec_matrix(tbl.column("qvec"))
-            home = tbl.column("home").to_numpy(zero_copy_only=False)
-            bound = tbl.column(bound_col).to_numpy(zero_copy_only=False)
             for sl in _row_slices(len(q_ids), n_g):
                 d_qc = np.sqrt(_elementwise_d2(qmat[sl], cmat))
                 with np.errstate(invalid="ignore"):
-                    r_q = np.sqrt(bound[sl]) * (1.0 + _BALL_SLACK)
+                    r_q = np.sqrt(cap[sl]) * (1.0 + _BALL_SLACK)
                 lb = d_qc[:, parent_of_g] - radii_g[None, :]
                 hits = (lb <= r_q[:, None]) & (
                     np.arange(n_g)[None, :] != home[sl][:, None]
                 )
-                qi, bj = np.nonzero(hits)
+                qi, gj = np.nonzero(hits)
                 if len(qi) == 0:
                     continue
                 yield pa.RecordBatch.from_arrays(
                     [
-                        pa.array(bj.astype(np.int32)),
+                        pa.array(gj.astype(np.int32)),
                         pa.array(q_ids[sl][qi], type=pa.int64()),
-                        _vec_list_array(qmat[sl][qi]),
-                        pa.array(bound[sl][qi], type=pa.float64()),
+                        _vec_list_array(qmat[sl][qi], vec_sql_type),
+                        pa.array(cap[sl][qi], type=pa.float64()),
                     ],
-                    names=["bucket", "query_id", "qvec", "cap"],
+                    names=["gbucket", "query_id", "qvec", "cap"],
                 )
 
-    return stage1.mapInArrow(batches, out_schema)
-
-
-def _stage2_kernel(k: int, id_col: str, vec_col: str):
-    def kernel(key, qtbl: pa.Table, ttbl: pa.Table) -> pa.Table:
-        schema = pa.schema(
-            [("query_id", pa.int64()), ("neighbor_id", pa.int64()), ("dist_sq", pa.float64())]
-        )
-        if qtbl.num_rows == 0 or ttbl.num_rows == 0:
-            return schema.empty_table()
-        q_ids = qtbl.column("query_id").to_numpy(zero_copy_only=False)
-        qmat = _vec_matrix(qtbl.column("qvec"))
-        cap = qtbl.column("cap").to_numpy(zero_copy_only=False)
-        t_ids = ttbl.column(id_col).to_numpy(zero_copy_only=False)
-        tmat = _vec_matrix(ttbl.column(vec_col))
-        out_q, out_n, out_d = [], [], []
-        for qi, (_, bids, bd) in enumerate(_topk_partial(q_ids, qmat, t_ids, tmat, k)):
-            keep = bd <= cap[qi]  # inclusive: a tie can displace by id
-            out_q.append(np.repeat(q_ids[qi], keep.sum()))
-            out_n.append(bids[keep])
-            out_d.append(bd[keep])
-        return pa.Table.from_arrays(
-            [
-                pa.array(np.concatenate(out_q), type=pa.int64()),
-                pa.array(np.concatenate(out_n), type=pa.int64()),
-                pa.array(np.concatenate(out_d), type=pa.float64()),
-            ],
-            schema=schema,
-        )
-
-    return kernel
-
-
-def _merge_topk(stage1: DataFrame, stage2: DataFrame, k: int) -> DataFrame:
-    exploded = stage1.select(
-        "query_id",
-        F.explode(F.arrays_zip(F.col("neighbor_ids"), F.col("dist_sqs"))).alias("z"),
-    ).select(
-        "query_id",
-        F.col("z.neighbor_ids").alias("neighbor_id"),
-        F.col("z.dist_sqs").alias("dist_sq"),
-    )
-    allc = exploded.unionByName(stage2)
-    w = Window.partitionBy("query_id").orderBy("dist_sq", "neighbor_id")
-    return (
-        allc.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "dist_sq")
+    return queries.mapInArrow(
+        batches, f"gbucket int, query_id long, qvec array<{vec_sql_type}>, cap double"
     )
 
 
@@ -531,20 +526,59 @@ def _salted_buckets(
     return members, plan
 
 
-def _resolve_num_centroids(
+def _bucketed(
     corpus: DataFrame,
     num_centroids: int | None,
+    id_col: str,
+    vec_col: str,
     target_bucket_rows: int,
-    corpus_count: int | None = None,
-) -> int:
-    """Explicit count wins; None derives it from a corpus count (one
-    metadata-cheap count job, skipped when the caller already knows
-    ``corpus_count``) — the auto policy is the DEFAULT because
-    defaults are what users run (r3 verdict What's-wrong #1)."""
-    if num_centroids is not None:
-        return num_centroids
-    n = corpus.count() if corpus_count is None else corpus_count
-    return auto_num_centroids(n, target_bucket_rows)
+    corpus_count: int | None,
+    vec_sql_type: str = "float",
+    with_radii: bool = True,
+):
+    """The bucketing prologue every k-means operator shares: release the
+    previous call's caches, resolve the bucket count, train centroids,
+    persist the home assignment (it feeds the salt aggregate AND every
+    cogroup, r4 ADVICE) and salt hot buckets. Returns (centroid
+    broadcast, members keyed by gbucket, plan).
+
+    An explicit num_centroids wins; None derives it from a corpus count
+    (one metadata-cheap count job, skipped when the caller already knows
+    ``corpus_count``) — the auto policy is the DEFAULT because defaults
+    are what users run (r3 verdict What's-wrong #1)."""
+    release_cached()
+    if num_centroids is None:
+        n = corpus.count() if corpus_count is None else corpus_count
+        num_centroids = auto_num_centroids(n, target_bucket_rows)
+    cmat = train_centroids(corpus, num_centroids, id_col, vec_col)
+    bc = corpus.sparkSession.sparkContext.broadcast(cmat)
+    assigned = _assign_home(corpus, bc, id_col, vec_col, vec_sql_type).persist()
+    _CACHED.append(assigned)
+    members, plan = _salted_buckets(
+        assigned, cmat.shape[0], id_col, target_bucket_rows, with_radii=with_radii
+    )
+    return bc, members.drop("bucket"), plan
+
+
+def _per_bucket(
+    queries: DataFrame,
+    members: DataFrame,
+    kernel,
+    schema: str,
+    id_col: str,
+    vec_col: str,
+    vec_sql_type: str = "float",
+) -> DataFrame:
+    """Run ``kernel`` once per gbucket on (queries, members) — the one
+    cogroup every stage goes through."""
+    return (
+        queries.groupBy("gbucket")
+        .cogroup(
+            _fresh_members(members, id_col, vec_col, vec_sql_type, bucket_col="gbucket")
+            .groupBy("gbucket")
+        )
+        .applyInArrow(kernel, schema)
+    )
 
 
 def all_pairs_l2_topk(
@@ -565,27 +599,12 @@ def all_pairs_l2_topk(
     ``corpus_count`` lets a caller that already knows the cardinality
     skip the count job (r4 What's-wrong #3: fixed auto-policy jobs
     dominated toy-corpus latency)."""
-    spark = corpus.sparkSession
-    release_cached()
-    num_centroids = _resolve_num_centroids(
-        corpus, num_centroids, target_bucket_rows, corpus_count
+    bc, members, plan = _bucketed(
+        corpus, num_centroids, id_col, vec_col, target_bucket_rows, corpus_count
     )
-    cmat = train_centroids(corpus, num_centroids, id_col, vec_col)
-    bc = spark.sparkContext.broadcast(cmat)
-    assigned = _assign_home(corpus, bc, id_col, vec_col).persist()
-    _CACHED.append(assigned)
-    members, plan = _salted_buckets(
-        assigned, cmat.shape[0], id_col, target_bucket_rows
-    )
-    members = members.drop("bucket")
-    bc_cr = spark.sparkContext.broadcast((cmat, plan.parent_of_g, plan.radii_g))
-    stage1 = (
-        members.drop("dist_c")
-        .groupBy("gbucket")
-        .cogroup(
-            _fresh_members(members, id_col, vec_col, bucket_col="gbucket").groupBy("gbucket")
-        )
-        .applyInArrow(_stage1_kernel(k, id_col, vec_col), _STAGE1_SCHEMA)
+    stage1 = _per_bucket(
+        members.drop("dist_c"), members, _stage1_kernel(k, id_col, vec_col),
+        _STAGE1_SCHEMA, id_col, vec_col,
     )
     if plan.num_global == 1:
         # one global bucket: stage 1 IS the exact all-pairs result and
@@ -593,36 +612,21 @@ def all_pairs_l2_topk(
         # g != home) — posexplode the already-(dist, id)-sorted lists
         # into final ranks; skips the stage-2 cogroup, the union and the
         # rank window outright
-        return (
-            stage1.select(
-                "query_id",
-                F.posexplode(F.arrays_zip(F.col("neighbor_ids"), F.col("dist_sqs"))).alias(
-                    "pos", "z"
-                ),
-            )
-            .select(
-                "query_id",
-                (F.col("pos") + 1).alias("rank"),
-                F.col("z.neighbor_ids").alias("neighbor_id"),
-                F.col("z.dist_sqs").alias("dist_sq"),
-            )
-        )
+        return _explode_ranked(stage1, "query_id")
     stage1 = stage1.persist()
     _CACHED.append(stage1)
     # materialize the cache before the downstream query fans out — its
     # probe and merge branches otherwise race on the cold cache and run
     # the stage-1 kernel redundantly
     stage1.count()
-    probes = _probe_explode(stage1, bc_cr, "kth_dist_sq")
-    stage2 = (
-        probes.withColumnRenamed("bucket", "gbucket")
-        .groupBy("gbucket")
-        .cogroup(
-            _fresh_members(members, id_col, vec_col, bucket_col="gbucket").groupBy("gbucket")
-        )
-        .applyInArrow(_stage2_kernel(k, id_col, vec_col), _STAGE2_SCHEMA)
+    probes = _ball_probe(
+        stage1.select("query_id", "qvec", "home", F.col("kth_dist_sq").alias("cap")), bc, plan
     )
-    return _merge_topk(stage1, stage2, k)
+    stage2 = _per_bucket(
+        probes, members, _stage2_kernel(k, id_col, vec_col), _STAGE2_SCHEMA, id_col, vec_col
+    )
+    cands = _explode_ranked(stage1, "query_id").drop("rank").unionByName(stage2)
+    return _rank_topk(cands, k, "query_id")
 
 
 # Bounded cache registry (same discipline as spark_aknn.aknn): each new
@@ -683,35 +687,24 @@ def ivf_topk(
     count; hot buckets are sub-split and a probed parent expands to ALL
     its sub-buckets, so salting never changes the probed member set —
     recall is identical to the unsalted layout."""
-    spark = corpus.sparkSession
     if deterministic:
         if num_centroids is None:
             raise ValueError("deterministic IVF requires an explicit num_centroids")
         pdf = corpus.select(id_col, vec_col).orderBy(id_col).limit(num_centroids).toPandas()
         cmat = _stack_vectors(pdf[vec_col])
-    else:
-        num_centroids = _resolve_num_centroids(
-            corpus, num_centroids, target_bucket_rows, corpus_count
-        )
-        cmat = train_centroids(corpus, num_centroids, id_col, vec_col)
-    bc = spark.sparkContext.broadcast(cmat)
-    assigned = _assign_home(corpus, bc, id_col, vec_col, exact_assign=deterministic)
-    if deterministic:
+        bc = corpus.sparkSession.sparkContext.broadcast(cmat)
         # unsalted layout: the SQL twin models parent buckets only
         plan = _BucketPlan(np.ones(cmat.shape[0], dtype=np.int64), radii_g=None)
-        members = assigned.withColumn("gbucket", F.col("bucket")).drop("bucket")
+        members = _assign_home(corpus, bc, id_col, vec_col, exact_assign=True)
+        members = members.withColumnRenamed("bucket", "gbucket")
     else:
-        # persist: assignment feeds the salt-counts aggregate AND stage 2
-        # (r4 ADVICE — it was recomputed per job); IVF probes by nprobe
-        # nearest parents, never a ball test, so skip the radii aggregate
-        release_cached()
-        assigned = assigned.persist()
-        _CACHED.append(assigned)
-        members, plan = _salted_buckets(
-            assigned, cmat.shape[0], id_col, target_bucket_rows, with_radii=False
+        # IVF probes by nprobe nearest parents, never a ball test, so
+        # skip the radii aggregate
+        bc, members, plan = _bucketed(
+            corpus, num_centroids, id_col, vec_col, target_bucket_rows, corpus_count,
+            with_radii=False,
         )
-        members = members.drop("bucket")
-    bc_plan = spark.sparkContext.broadcast((plan.n_sub, plan.offsets))
+    bc_plan = corpus.sparkSession.sparkContext.broadcast((plan.n_sub, plan.offsets))
     out_schema = "gbucket int, query_id long, qvec array<float>"
 
     def q_probes(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -722,16 +715,10 @@ def ivf_topk(
             tbl = pa.Table.from_batches([rb])
             if tbl.num_rows == 0:
                 continue
-            ids = tbl.column(id_col).to_numpy(zero_copy_only=False)
+            ids = _np(tbl, id_col)
             mat = _vec_matrix(tbl.column(vec_col))
             for sl in _row_slices(len(ids), cm.shape[0]):
-                if deterministic:
-                    d2 = np.stack(
-                        [_l2_exact_ltr(mat[sl] - cm[j]) for j in range(cm.shape[0])],
-                        axis=1,
-                    )
-                else:
-                    d2 = _gemm_d2(mat[sl], cm)
+                d2 = _centroid_d2(mat[sl], cm, deterministic)
                 # stable sort == (distance, centroid-index) lexicographic
                 near = np.argsort(d2, axis=1, kind="stable")[:, :p]
                 n_rows = near.shape[0]
@@ -752,21 +739,12 @@ def ivf_topk(
     probes = corpus.select(id_col, vec_col).mapInArrow(q_probes, out_schema).withColumn(
         "cap", F.lit(float("inf"))
     )
-    stage2 = (
-        probes.groupBy("gbucket")
-        .cogroup(
-            _fresh_members(members, id_col, vec_col, bucket_col="gbucket").groupBy("gbucket")
-        )
-        .applyInArrow(_stage2_kernel(k, id_col, vec_col), _STAGE2_SCHEMA)
+    stage2 = _per_bucket(
+        probes, members, _stage2_kernel(k, id_col, vec_col), _STAGE2_SCHEMA, id_col, vec_col
     )
     # every member has exactly one home bucket, so (query, neighbor) is
     # already unique across probed buckets — no dedup shuffle needed
-    w = Window.partitionBy("query_id").orderBy("dist_sq", "neighbor_id")
-    return (
-        stage2.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "dist_sq")
-    )
+    return _rank_topk(stage2, k, "query_id")
 
 
 def ivf_duckdb_sql(
@@ -840,57 +818,23 @@ def embedding_near_dup_pairs(
     found exactly once — in b's home sub-bucket, which a provably
     probes. num_centroids=None auto-sizes from a corpus count and
     sub-splits hot buckets (the grid-salting analogue)."""
-    spark = corpus.sparkSession
-    release_cached()
-    num_centroids = _resolve_num_centroids(
-        corpus, num_centroids, target_bucket_rows, corpus_count
+    bc, members, plan = _bucketed(
+        corpus, num_centroids, id_col, vec_col, target_bucket_rows, corpus_count, vec_sql_type
     )
-    cmat = train_centroids(corpus, num_centroids, id_col, vec_col)
-    bc = spark.sparkContext.broadcast(cmat)
-    assigned = _assign_home(corpus, bc, id_col, vec_col, vec_sql_type).persist()
-    _CACHED.append(assigned)
-    members, plan = _salted_buckets(
-        assigned, cmat.shape[0], id_col, target_bucket_rows
+    queries = corpus.select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).alias("qvec"),
+        F.lit(-1).alias("home"),
+        F.lit(float(max_dist_sq)).alias("cap"),
     )
-    members = members.drop("bucket")
-    bc_cr = spark.sparkContext.broadcast((cmat, plan.parent_of_g, plan.radii_g))
-    out_schema = f"gbucket int, query_id long, qvec array<{vec_sql_type}>"
-
-    def probes_fn(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        cm, parent_of_g, rr = bc_cr.value
-        r_pair = np.sqrt(max_dist_sq) * (1.0 + _BALL_SLACK)
-        for rb in it:
-            tbl = pa.Table.from_batches([rb])
-            if tbl.num_rows == 0:
-                continue
-            ids = tbl.column(id_col).to_numpy(zero_copy_only=False)
-            mat = _vec_matrix(tbl.column(vec_col))
-            for sl in _row_slices(len(ids), len(parent_of_g)):
-                d_qc = np.sqrt(_elementwise_d2(mat[sl], cm))
-                hits = (d_qc[:, parent_of_g] - rr[None, :]) <= r_pair
-                qi, bj = np.nonzero(hits)
-                if len(qi) == 0:
-                    continue
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(bj.astype(np.int32)),
-                        pa.array(ids[sl][qi], type=pa.int64()),
-                        _vec_list_array(mat[sl][qi], vec_sql_type),
-                    ],
-                    names=["gbucket", "query_id", "qvec"],
-                )
-
-    probes = corpus.select(id_col, vec_col).mapInArrow(probes_fn, out_schema)
+    probes = _ball_probe(queries, bc, plan, vec_sql_type)
 
     def pair_kernel(key, qtbl: pa.Table, ttbl: pa.Table) -> pa.Table:
-        schema = pa.schema(
-            [("a", pa.int64()), ("b", pa.int64()), ("dist_sq", pa.float64())]
-        )
         if qtbl.num_rows == 0 or ttbl.num_rows == 0:
-            return schema.empty_table()
-        q_ids = qtbl.column("query_id").to_numpy(zero_copy_only=False)
+            return _PAIRS_PA.empty_table()
+        q_ids = _np(qtbl, "query_id")
         qmat = _vec_matrix(qtbl.column("qvec"))
-        t_ids = ttbl.column(id_col).to_numpy(zero_copy_only=False)
+        t_ids = _np(ttbl, id_col)
         tmat = _vec_matrix(ttbl.column(vec_col))
         d2 = _gemm_d2(qmat, tmat)
         # norm-scaled GEMM tolerance (r01 ADVICE): the |a|^2+|b|^2-2ab
@@ -905,7 +849,7 @@ def embedding_near_dup_pairs(
         keep = q_ids[cand_q] < t_ids[cand_t]  # a < b, no self
         cand_q, cand_t = cand_q[keep], cand_t[keep]
         if len(cand_q) == 0:
-            return schema.empty_table()
+            return _PAIRS_PA.empty_table()
         exact = _l2_exact_ltr(qmat[cand_q] - tmat[cand_t])
         final = exact <= max_dist_sq
         return pa.Table.from_arrays(
@@ -914,17 +858,10 @@ def embedding_near_dup_pairs(
                 pa.array(t_ids[cand_t][final], type=pa.int64()),
                 pa.array(exact[final], type=pa.float64()),
             ],
-            schema=schema,
+            schema=_PAIRS_PA,
         )
 
-    return (
-        probes.groupBy("gbucket")
-        .cogroup(
-            _fresh_members(members, id_col, vec_col, vec_sql_type, bucket_col="gbucket")
-            .groupBy("gbucket")
-        )
-        .applyInArrow(pair_kernel, "a long, b long, dist_sq double")
-    )
+    return _per_bucket(probes, members, pair_kernel, _PAIRS_SCHEMA, id_col, vec_col, vec_sql_type)
 
 
 def _normalized(corpus: DataFrame, id_col: str, vec_col: str) -> DataFrame:

@@ -456,12 +456,6 @@ def _mix64(x: np.ndarray) -> np.ndarray:
 # both engines.
 
 
-def _word_hash64():
-    """64-bit word hash as a signed long (bit pattern == the unsigned
-    hex read the DuckDB twin performs)."""
-    return F.conv(F.substring(F.md5(F.col("w")), 1, 16), 16, -10).cast("long")
-
-
 def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """64-bit SimHash by per-bit majority vote over word hashes —
     (doc_id, simhash long). One explode + one groupBy with 64 partial-agg
@@ -470,7 +464,7 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> Da
         F.col(id_col),
         F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("w"),
     ).filter(F.col("w") != "")
-    h = words.select(id_col, _word_hash64().alias("h"))
+    h = words.select(id_col, _word_hash_col(F.col("w"), "md5").alias("h"))
     votes = [
         F.sum(
             F.when(F.shiftrightunsigned(F.col("h"), i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)

@@ -16,7 +16,8 @@ from pyspark.sql import SparkSession
 
 
 def default_cpus() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """SPARK_GRAFT_CPUS, else the cores this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 # One core-slot per Python worker (Spark owns the machine-level

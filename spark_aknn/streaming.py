@@ -73,12 +73,13 @@ def _extent_update(key, pdfs, state, idle_timeout_ms: int):
     eviction protocol is unit-testable without a running query.
 
     State hygiene (r3 verdict What's-wrong #4): a tile that stops
-    receiving events is EVICTED after idle_timeout_ms of processing
-    time — its final snapshot is emitted with evicted=true and the
-    state removed, so state size tracks the ACTIVE key set, not every
-    tile ever seen (under NoTimeout a 10^12-point feed would pin every
-    tile's state forever). A tile that re-appears later simply restarts
-    its running aggregate from zero."""
+    receiving events is EVICTED once the event-time watermark passes
+    its last update's watermark by idle_timeout_ms — its final snapshot
+    is emitted with evicted=true and the state removed, so state size
+    tracks the ACTIVE key set, not every tile ever seen (under NoTimeout
+    a 10^12-point feed would pin every tile's state forever). A tile
+    that re-appears later simply restarts its running aggregate from
+    zero."""
     import pandas as pd
 
     if state.hasTimedOut:
@@ -102,7 +103,7 @@ def _extent_update(key, pdfs, state, idle_timeout_ms: int):
         mn = min(mn, float(pdf["value"].min()))
         mx = max(mx, float(pdf["value"].max()))
     state.update((n, mn, mx))
-    state.setTimeoutDuration(idle_timeout_ms)
+    state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + idle_timeout_ms)
     yield pd.DataFrame(
         {
             "tile_id": [key[0]],
@@ -119,12 +120,22 @@ def stream_running_extent(
 ) -> DataFrame:
     """Per-tile running (count, min/max value) via custom state —
     the applyInPandasWithState pattern for stateful operators beyond
-    built-in windows, with processing-time idle eviction (emitted as
-    evicted=true rows) so state stays bounded by the active key set."""
+    built-in windows, with idle eviction (emitted as evicted=true rows)
+    so state stays bounded by the active key set.
+
+    Idleness is measured in EVENT time: the watermark trails the newest
+    ``ts`` by idle_timeout_ms, and a tile is evicted once the watermark
+    has moved idle_timeout_ms past where it stood at the tile's last
+    update; events older than the watermark are dropped as late. Unlike
+    a processing-time timeout, which schedules a fresh no-data batch
+    after every batch, this lets an ``availableNow`` trigger finish."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    pts = with_event_points(events).withColumn(
-        "tile_id", tile_id_col(F.col("x"), F.col("y"), tiles_per_side)
+    pts = (
+        with_event_points(events)
+        .withColumn("ts", F.col("ts").cast("timestamp"))
+        .withWatermark("ts", f"{idle_timeout_ms} milliseconds")
+        .withColumn("tile_id", tile_id_col(F.col("x"), F.col("y"), tiles_per_side))
     )
 
     def update(key, pdfs, state):
@@ -135,5 +146,5 @@ def stream_running_extent(
         _EXTENT_OUT_SCHEMA,
         _EXTENT_STATE_SCHEMA,
         "update",
-        GroupStateTimeout.ProcessingTimeTimeout,
+        GroupStateTimeout.EventTimeTimeout,
     )

@@ -141,6 +141,7 @@ class _FakeState:
         self.hasTimedOut = timed_out
         self.removed = False
         self.timeout_set = None
+        self.watermark_ms = 0
 
     @property
     def exists(self):
@@ -156,15 +157,19 @@ class _FakeState:
     def remove(self):
         self._v, self.removed = None, True
 
-    def setTimeoutDuration(self, ms):
+    def getCurrentWatermarkMs(self):
+        return self.watermark_ms
+
+    def setTimeoutTimestamp(self, ms):
         self.timeout_set = ms
 
 
 def test_extent_update_eviction_protocol():
-    """The stream_running_extent state transition: normal updates arm a
-    processing-time timeout; a timed-out key emits its final snapshot
-    flagged evicted=true and removes its state (r3 verdict: state must
-    track the ACTIVE key set, no NoTimeout)."""
+    """The stream_running_extent state transition: normal updates arm an
+    event-time timeout idle_timeout_ms past the current watermark; a
+    timed-out key emits its final snapshot flagged evicted=true and
+    removes its state (r3 verdict: state must track the ACTIVE key set,
+    no NoTimeout)."""
     import pandas as pd
 
     from spark_aknn.streaming import _extent_update
@@ -176,9 +181,12 @@ def test_extent_update_eviction_protocol():
     assert (out[0].n[0], out[0].min_value[0], out[0].max_value[0]) == (3, 1.0, 5.0)
     assert st.get == (3, 1.0, 5.0) and st.timeout_set == 60_000
 
-    # accumulate across a second batch
+    # accumulate across a second batch; the timeout re-arms from the
+    # watermark as it now stands
+    st.watermark_ms = 1_000_000
     out = list(_extent_update((7,), [pd.DataFrame({"value": [0.5]})], st, 60_000))
     assert (out[0].n[0], out[0].min_value[0]) == (4, 0.5)
+    assert st.timeout_set == 1_060_000
 
     # idle timeout fires: final snapshot evicted, state removed
     st.hasTimedOut = True
@@ -193,13 +201,14 @@ def test_extent_update_eviction_protocol():
 
     # (the docstring may DISCUSS NoTimeout; the code must not use it)
     assert "GroupStateTimeout.NoTimeout" not in inspect.getsource(sm)
-    assert "GroupStateTimeout.ProcessingTimeTimeout" in inspect.getsource(sm)
+    assert "GroupStateTimeout.EventTimeTimeout" in inspect.getsource(sm)
 
 
 def test_stream_running_extent_matches_batch(spark, tmp_path):
-    """Integration: availableNow pass over the events table — emitted
-    running aggregates for each tile must equal the batch min/max/count
-    (no evictions fire within a single fast microbatch pass)."""
+    """Integration: availableNow pass over the events table — the query
+    terminates, and the emitted running aggregates for each tile equal
+    the batch min/max/count (the no-data batch that follows the data
+    evicts every tile, but those rows are flagged evicted)."""
     from spark_aknn.streaming import stream_running_extent, with_event_points
     from spark_aknn.raster import tile_id_col
 
@@ -215,7 +224,10 @@ def test_stream_running_extent_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    try:
+        assert q.awaitTermination(120)
+    finally:
+        q.stop()
     got = (
         spark.sql(
             "select tile_id, max(n) as n, min(min_value) as mn, max(max_value) as mx "

@@ -23,11 +23,12 @@ from __future__ import annotations
 import sys
 import time
 from collections.abc import Iterator
+from pathlib import Path
 
 import numpy as np
 import pyarrow as pa
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from spark_aknn.session import get_spark  # noqa: E402
 

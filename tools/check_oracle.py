@@ -5,12 +5,13 @@ compare row count, schema width, and order-insensitive values."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from spark_aknn.session import get_spark  # noqa: E402

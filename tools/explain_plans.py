@@ -5,8 +5,10 @@ the kNN-path never reads the image bytes column. Writes PLANS.md."""
 import io
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 from contextlib import redirect_stdout
 
@@ -136,7 +138,7 @@ def main():
         lines.append(plan.strip()[:4000])
         lines.append("```")
         lines.append("")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(REPO / "PLANS.md", "w") as f:
         f.write("\n".join(lines) + "\n")
     print("checks pass:", ok)
     spark.stop()
