@@ -5,7 +5,7 @@ all-k-nearest-neighbors join over 2D points, solved there with a C++
 plane-sweep-over-stripes algorithm) as an idiomatic Spark DataFrame plan:
 
   points -> range partition into y-stripes (quantile boundaries)
-         -> stripe-local kNN via a vectorized numpy kernel in applyInPandas
+         -> stripe-local kNN via a vectorized numpy kernel in applyInArrow
          -> boundary-exchange shuffle for queries whose k-th distance
             crosses a stripe edge
          -> JVM-side window top-k merge

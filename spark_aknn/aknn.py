@@ -65,6 +65,7 @@ _STAGE1_PA = pa.schema(
         ("scanned", pa.int64()),
     ]
 )
+_CELL_KEYS = ["stripe_id", "sub_id"]
 _STAGE2_SCHEMA = "input_id long, neighbor_id long, dist_sq double"
 _STAGE2_PA = pa.schema(
     [("input_id", pa.int64()), ("neighbor_id", pa.int64()), ("dist_sq", pa.float64())]
@@ -193,19 +194,31 @@ def _fresh_lineage(df: DataFrame) -> DataFrame:
     expression ids. Required for self-joins: cogrouping two plans that
     SHARE attribute ids trips Spark's dedup/pruning into dropping the
     right side's non-key columns (the kernels then see a key-only
-    schema). Values are bit-preserved (+0 / +0.0; coordinates here are
-    never -0.0)."""
-    zero = {"int": F.lit(0), "bigint": F.lit(0), "double": F.lit(0.0)}
-    return df.select(
-        *[(F.col(c) + zero[t]).alias(c) for c, t in df.dtypes]
+    schema). Values are bit-preserved (+0 cast to the column's type,
+    elementwise for array columns; coordinates here are never -0.0)."""
+
+    def plus_zero(c: str, t: str):
+        if t.startswith("array<"):
+            return F.transform(F.col(c), lambda v: v + F.lit(0).cast(t[6:-1]))
+        return F.col(c) + F.lit(0).cast(t)
+
+    return df.select(*[plus_zero(c, t).alias(c) for c, t in df.dtypes])
+
+
+def _cogroup(queries: DataFrame, training: DataFrame, keys, kernel, schema: str) -> DataFrame:
+    """The one kernel boundary of the all-kNN stages and the ANN tier:
+    ``kernel(key, queries, training)`` runs once per key group on Arrow
+    tables, the training side re-projected by _fresh_lineage."""
+    return (
+        queries.groupBy(*keys)
+        .cogroup(_fresh_lineage(training).groupBy(*keys))
+        .applyInArrow(kernel, schema)
     )
 
 
 def stage1_local_topk(input_cells: DataFrame, training_cells: DataFrame, k: int) -> DataFrame:
-    return (
-        input_cells.groupBy("stripe_id", "sub_id")
-        .cogroup(_fresh_lineage(training_cells).groupBy("stripe_id", "sub_id"))
-        .applyInArrow(_stage1_kernel_factory(k), _STAGE1_SCHEMA)
+    return _cogroup(
+        input_cells, training_cells, _CELL_KEYS, _stage1_kernel_factory(k), _STAGE1_SCHEMA
     )
 
 
@@ -296,11 +309,7 @@ def build_frontier(flagged: DataFrame, cells: DataFrame, grid: Grid) -> DataFram
 
 
 def stage2_exchange(frontier: DataFrame, training_cells: DataFrame, k: int) -> DataFrame:
-    return (
-        frontier.groupBy("stripe_id", "sub_id")
-        .cogroup(_fresh_lineage(training_cells).groupBy("stripe_id", "sub_id"))
-        .applyInArrow(_stage2_kernel_factory(k), _STAGE2_SCHEMA)
-    )
+    return _cogroup(frontier, training_cells, _CELL_KEYS, _stage2_kernel_factory(k), _STAGE2_SCHEMA)
 
 
 def _explode_ranked(flagged: DataFrame, id_col: str = "input_id") -> DataFrame:
@@ -365,6 +374,114 @@ def merge_topk(
     return done.unionByName(_rank_topk(allc, k))
 
 
+def _cell_points(
+    inputs: DataFrame, training: DataFrame, grid: Grid, margin_factor: float, widen=lambda df: df
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The point projection and cell assignment of both all-kNN
+    operators: (input cells, home-assigned training cells, training
+    cells margin-replicated for stage 1), each (stripe_id, sub_id, id,
+    x, y). ``widen`` wraps the stage-1 map side only.
+
+    A null, NaN or infinite coordinate on either side raises an error
+    naming the point id — the sweep would otherwise drop the point
+    silently (no neighbours, never a neighbour). The check rides in the
+    projection: no extra job."""
+    ok = (F.abs("x") < float("inf")) & (F.abs("y") < float("inf"))  # null/NaN/inf fail
+    err = F.raise_error(F.format_string("null or non-finite coordinate at point id %s", "id"))
+
+    def checked(df: DataFrame) -> DataFrame:
+        return df.select("id", *[F.when(ok, F.col(c)).otherwise(err).alias(c) for c in ("x", "y")])
+
+    cols = [*_CELL_KEYS, "id", "x", "y"]
+    inp, trn = checked(inputs), checked(training)
+    return (
+        assign_cells(widen(inp), grid).select(*cols),
+        assign_cells(trn, grid).select(*cols),
+        assign_cells_margin(widen(trn), grid, margin_factor).select(*cols),
+    )
+
+
+def _downstream(
+    stage1: DataFrame, trn_home: DataFrame, grid: Grid, k: int, margin_factor: float, n_trn=None
+) -> DataFrame:
+    """Everything after stage 1, shared by both all-kNN operators:
+    escape flag -> single-cell exit -> frontier and stage 2 -> merge.
+    ``trn_home`` is the home-assigned training; ``n_trn`` (the
+    planner's training count) selects the eager-stats shape, None the
+    lazy single-action plan."""
+    spark = stage1.sparkSession
+    cells = cells_df(spark, grid, margin_factor=margin_factor)
+    flagged = with_escape_flag(stage1, cells)
+    if grid.num_stripes == 1 and not grid.x_splits:
+        return merge_topk(flagged, _empty_stage2(spark), k)
+    # stage 2 sweeps home-assigned training, restricted to the cells the
+    # frontier actually targets: without it every cell's training pays
+    # the second cogroup shuffle + Arrow transfer even when no frontier
+    # query lands there.
+    #
+    # Two downstream shapes (measured crossover — see OPTIMIZATION_r06.md
+    # "scale check"):
+    #  * eager-stats (small/medium corpora): one driver job materializes
+    #    the caches and returns per-cell frontier counts that plan
+    #    stage 2. Wins where fixed scheduling overhead dominates and
+    #    concurrent branches would race the cold cache (sub-second
+    #    tasks overlap almost fully).
+    #  * lazy (large corpora, and a committed stage 1): the classic
+    #    single-action plan with a broadcast-semi-join prune. The eager
+    #    job's serialization barrier costs real seconds once the stage-1
+    #    pass is long, and the cache race self-resolves at scale (long
+    #    tasks populate partitions before sibling branches reach them).
+    if n_trn is not None:
+        par = spark.sparkContext.defaultParallelism
+        # the escaping subset is typically <1% of queries under margin
+        # replication — cache it separately so the needy/frontier legs
+        # scan a tiny table instead of re-scanning the whole stage-1
+        # cache
+        esc = flagged.filter(F.col("escapes")).persist()
+        _CACHED_STAGE1.append(esc)
+        frontier = build_frontier(esc, cells, grid)
+        # ONE eager job: computing the per-cell frontier counts also
+        # materializes both caches before the downstream query fans out
+        # — its independent result/broadcast branches otherwise race on
+        # the cold cache and re-run the whole stage-1 kernel up to 3x
+        # concurrently (measured 2.5x wall under host contention). The
+        # counts themselves are O(#cells) driver data that prune
+        # training with a literal IN-set (no broadcast-exchange job) and
+        # size the stage-2 cogroup to the frontier instead of the
+        # session default (whose partitions would otherwise be ~all
+        # empty for the typical sub-1% escaping tail).
+        stats = frontier.groupBy(*_CELL_KEYS).count().collect()
+        if not stats:
+            # no query's kth circle reaches another cell — stage-1 ranks
+            # are final
+            return merge_topk(flagged, _empty_stage2(spark), k, escaping=esc)
+        n_frontier = sum(r["count"] for r in stats)
+        # stage-2 task sizing must count BOTH cogroup sides: the
+        # frontier queries and the training rows of the touched cells
+        # (estimated as the touched share of the planner's row count —
+        # equal-count stripes make per-cell counts ~uniform); cells bound
+        # the useful parallelism.
+        n_cells = sum(grid.num_subs(s) for s in range(grid.num_stripes))
+        est_trn = n_trn * len(stats) / max(1, n_cells)
+        np2 = max(1, min(2 * par, len(stats), -(-int(n_frontier + est_trn) // 16384)))
+        if len(stats) <= 65536:
+            ckey = F.col("stripe_id").cast("long") * F.lit(1 << 32) + F.col("sub_id")
+            keys = [r["stripe_id"] * (1 << 32) + r["sub_id"] for r in stats]
+            trn_s2 = trn_home.filter(ckey.isin(keys))
+        else:  # IN-set too large for an expression — broadcast semi-join
+            touched = frontier.select(*_CELL_KEYS).distinct()
+            trn_s2 = trn_home.join(F.broadcast(touched), _CELL_KEYS, "left_semi")
+        stage2 = stage2_exchange(
+            frontier.repartition(np2, *_CELL_KEYS), trn_s2.repartition(np2, *_CELL_KEYS), k
+        )
+        return merge_topk(flagged, stage2, k, dedup=margin_factor > 0, escaping=esc)
+    frontier = build_frontier(flagged, cells, grid)
+    touched = frontier.select(*_CELL_KEYS).distinct()
+    trn_s2 = trn_home.join(F.broadcast(touched), _CELL_KEYS, "left_semi")
+    stage2 = stage2_exchange(frontier, trn_s2, k)
+    return merge_topk(flagged, stage2, k, dedup=margin_factor > 0)
+
+
 # The one persisted intermediate per all_knn_join call (stage-1 is read
 # by three downstream branches). Bounded: each new call releases the
 # previous call's cache, and release_cached() empties it explicitly, so
@@ -388,12 +505,14 @@ def all_knn_join(
     num_stripes: int = 0,
     grid: Grid | None = None,
     salt_factor: float = 4.0,
-    persist: bool = True,
     split_on: str = "training",
     margin_factor: float = 0.9,
     eager_stats_max_rows: int = 2_000_000,
 ) -> DataFrame:
     """All-kNN join: (id,x,y) x (id,x,y) -> (input_id, rank, neighbor_id, dist_sq).
+
+    Every coordinate must be finite: a null, NaN or infinite x or y on
+    either side fails the join with an error naming the point id.
 
     num_stripes=0 picks round(sqrt(|T|)/sqrt(k)) like the reference
     (AllKnnResultStripes.h:141-151); grid.plan_grid plans the grid and
@@ -419,15 +538,18 @@ def all_knn_join(
     Grids sized by the auto formula tie stripe height to k; reusing a
     grid built for a much smaller k leaves the margin under the kth
     radius — still exact, just more stage-2 traffic.
+
+    Stage 1 is cached in memory; eager_stats_max_rows bounds the planned
+    training count up to which the downstream takes its eager-stats
+    shape (see _downstream).
     """
     if split_on not in ("training", "input"):
         raise ValueError(f"split_on must be 'training' or 'input', got {split_on!r}")
-    spark = input_points.sparkSession
-    par = spark.sparkContext.defaultParallelism
+    par = input_points.sparkSession.sparkContext.defaultParallelism
     split_side = training_points if split_on == "training" else input_points
-    n_trn_known: int | None = None
+    n_trn: int | None = None
     if grid is None:
-        grid, n_trn_known = plan_grid(
+        grid, n_trn = plan_grid(
             split_side,
             k,
             num_stripes,
@@ -435,8 +557,6 @@ def all_knn_join(
             salt_factor=salt_factor,
             margin_factor=margin_factor,
         )
-    cells = cells_df(spark, grid, margin_factor=margin_factor)
-    cols = ["stripe_id", "sub_id", "id", "x", "y"]
 
     def widen(df: DataFrame) -> DataFrame:
         # parallelism floor for the stage-1 map side only (it runs once,
@@ -447,92 +567,12 @@ def all_knn_join(
         # inputs pass through untouched, so this is a no-op at scale.
         return df.repartition(par) if df.rdd.getNumPartitions() < par else df
 
-    inp = assign_cells(widen(input_points.select("id", "x", "y")), grid).select(*cols)
-    trn_home = assign_cells(training_points.select("id", "x", "y"), grid).select(*cols)
-    trn_s1 = (
-        assign_cells_margin(widen(training_points.select("id", "x", "y")), grid, margin_factor)
-        .select(*cols)
-        if margin_factor > 0
-        else trn_home
-    )
-    stage1 = stage1_local_topk(inp, trn_s1, k)
-    if persist:
-        release_cached()
-        stage1 = stage1.persist()
-        _CACHED_STAGE1.append(stage1)
-    flagged = with_escape_flag(stage1, cells)
-    if grid.num_stripes == 1 and not grid.x_splits:
-        return merge_topk(flagged, _empty_stage2(spark), k)
-    # stage 2 sweeps home-assigned training, restricted to the cells the
-    # frontier actually targets: without it every cell's training pays
-    # the second cogroup shuffle + Arrow transfer even when no frontier
-    # query lands there.
-    #
-    # Two downstream shapes, picked by corpus size (measured crossover —
-    # see OPTIMIZATION_r06.md "scale check"):
-    #  * eager-stats (small/medium corpora): one driver job materializes
-    #    the caches and returns per-cell frontier counts that plan
-    #    stage 2. Wins where fixed scheduling overhead dominates and
-    #    concurrent branches would race the cold cache (sub-second
-    #    tasks overlap almost fully).
-    #  * lazy (large corpora): the classic single-action plan with a
-    #    broadcast-semi-join prune. The eager job's serialization
-    #    barrier costs real seconds once the stage-1 pass is long, and
-    #    the cache race self-resolves at scale (long tasks populate
-    #    partitions before sibling branches reach them).
-    eager = (
-        persist and n_trn_known is not None and n_trn_known <= eager_stats_max_rows
-    )
-    if eager:
-        # the escaping subset is typically <1% of queries under margin
-        # replication — cache it separately so the needy/frontier legs
-        # scan a tiny table instead of re-scanning the whole stage-1
-        # cache
-        esc = flagged.filter(F.col("escapes")).persist()
-        _CACHED_STAGE1.append(esc)
-        frontier = build_frontier(esc, cells, grid)
-        # ONE eager job: computing the per-cell frontier counts also
-        # materializes both caches before the downstream query fans out
-        # — its independent result/broadcast branches otherwise race on
-        # the cold cache and re-run the whole stage-1 kernel up to 3x
-        # concurrently (measured 2.5x wall under host contention). The
-        # counts themselves are O(#cells) driver data that prune
-        # training with a literal IN-set (no broadcast-exchange job) and
-        # size the stage-2 cogroup to the frontier instead of the
-        # session default (whose partitions would otherwise be ~all
-        # empty for the typical sub-1% escaping tail).
-        stats = frontier.groupBy("stripe_id", "sub_id").count().collect()
-        if not stats:
-            # no query's kth circle reaches another cell — stage-1 ranks
-            # are final
-            return merge_topk(flagged, _empty_stage2(spark), k, escaping=esc)
-        n_frontier = sum(r["count"] for r in stats)
-        # stage-2 task sizing must count BOTH cogroup sides: the
-        # frontier queries and the training rows of the touched cells
-        # (estimated as the touched share of the planner's row count —
-        # equal-count stripes make per-cell counts ~uniform); cells bound
-        # the useful parallelism.
-        n_cells = sum(grid.num_subs(s) for s in range(grid.num_stripes))
-        est_trn = n_trn_known * len(stats) / max(1, n_cells)
-        np2 = max(1, min(2 * par, len(stats), -(-int(n_frontier + est_trn) // 16384)))
-        if len(stats) <= 65536:
-            ckey = F.col("stripe_id").cast("long") * F.lit(1 << 32) + F.col("sub_id")
-            keys = [r["stripe_id"] * (1 << 32) + r["sub_id"] for r in stats]
-            trn_s2 = trn_home.filter(ckey.isin(keys))
-        else:  # IN-set too large for an expression — broadcast semi-join
-            touched = frontier.select("stripe_id", "sub_id").distinct()
-            trn_s2 = trn_home.join(F.broadcast(touched), ["stripe_id", "sub_id"], "left_semi")
-        stage2 = stage2_exchange(
-            frontier.repartition(np2, "stripe_id", "sub_id"),
-            trn_s2.repartition(np2, "stripe_id", "sub_id"),
-            k,
-        )
-        return merge_topk(flagged, stage2, k, dedup=margin_factor > 0, escaping=esc)
-    frontier = build_frontier(flagged, cells, grid)
-    touched = frontier.select("stripe_id", "sub_id").distinct()
-    trn_s2 = trn_home.join(F.broadcast(touched), ["stripe_id", "sub_id"], "left_semi")
-    stage2 = stage2_exchange(frontier, trn_s2, k)
-    return merge_topk(flagged, stage2, k, dedup=margin_factor > 0)
+    inp, trn_home, trn_s1 = _cell_points(input_points, training_points, grid, margin_factor, widen)
+    release_cached()
+    stage1 = stage1_local_topk(inp, trn_s1, k).persist()
+    _CACHED_STAGE1.append(stage1)
+    eager = n_trn is not None and n_trn <= eager_stats_max_rows
+    return _downstream(stage1, trn_home, grid, k, margin_factor, n_trn if eager else None)
 
 
 def _empty_stage2(spark) -> DataFrame:

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_aknn.localrel import local_df
-from spark_aknn.stripes import assign_stripes, auto_num_stripes
+from spark_aknn.stripes import assign_stripes_multi, auto_num_stripes
 
 NEG_INF = float("-inf")
 POS_INF = float("inf")
@@ -303,7 +303,7 @@ def build_grid(
     hot = {s: c for s, c in counts.items() if c > salt_factor * mean}
     if not hot:
         return grid
-    striped = assign_stripes(training, y_splits, col="y", out="stripe_id")
+    striped = assign_stripes_multi(training, y_splits, ["y"], ["stripe_id"])
     probs_per_stripe = {s: min(MAX_SUBS, max(2, int(round(c / mean)))) for s, c in hot.items()}
     hot_df = striped.filter(F.col("stripe_id").isin(list(hot.keys())))
     # one aggregation pass: per-stripe x-quantiles via percentile_approx
@@ -396,7 +396,7 @@ def assign_cells(df: DataFrame, grid: Grid) -> DataFrame:
     Bucketizer binary search for the stripe, then a broadcast join with
     the per-stripe x-boundary arrays + an ``aggregate`` fold for sub_id
     (substripe counts are small, O(#subs) per row)."""
-    out = assign_stripes(df, grid.y_splits, col="y", out="stripe_id")
+    out = assign_stripes_multi(df, grid.y_splits, ["y"], ["stripe_id"])
     if not grid.x_splits:
         return out.withColumn("sub_id", F.lit(0))
     spark = df.sparkSession
@@ -461,7 +461,7 @@ def assign_cells_margin(df: DataFrame, grid: Grid, margin_factor: float) -> Data
         ],
         "stripe_id int, up_t double, dn_t double",
     )
-    out = assign_stripes(df, grid.y_splits, col="y", out="stripe_id")
+    out = assign_stripes_multi(df, grid.y_splits, ["y"], ["stripe_id"])
     out = out.join(F.broadcast(marg), "stripe_id", "left")
     targets = F.array_compact(
         F.array(

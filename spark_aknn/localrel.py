@@ -31,6 +31,10 @@ _MAX_VALUES_ROWS = 4096
 
 
 def _sql_double(v: float) -> str:
+    # the string->DOUBLE cast forces the float64 parser (a bare decimal
+    # literal types as DECIMAL in Spark SQL and DuckDB alike, perturbing
+    # the low bits), so the constant is bit-identical to the float
+    # passed in — the image tier's DuckDB oracle relies on it too
     v = float(v)
     if math.isinf(v):
         return f"CAST('{'-' if v < 0 else ''}Infinity' AS DOUBLE)"

@@ -23,6 +23,11 @@ wall. A batch that fails does not stop the others from committing; its
 error is re-raised once every batch has finished, and a re-run
 recomputes only the batches without a manifest. The final phase starts
 after every batch has committed.
+
+Only the materialization of stage 1 is this module's own: the point
+projection, the cell assignment and everything after stage 1 (escape
+flag, single-cell exit, frontier, stage 2, merge) are all_knn_join's,
+run on the committed batches in its lazy shape.
 """
 
 from __future__ import annotations
@@ -36,14 +41,8 @@ from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from spark_aknn.aknn import (
-    build_frontier,
-    merge_topk,
-    stage1_local_topk,
-    stage2_exchange,
-    with_escape_flag,
-)
-from spark_aknn.grid import Grid, assign_cells, assign_cells_margin, cells_df, plan_grid
+from spark_aknn.aknn import _cell_points, _downstream, stage1_local_topk
+from spark_aknn.grid import Grid, plan_grid
 
 
 def _write_json_atomic(path: str, obj: dict) -> None:
@@ -114,6 +113,12 @@ def checkpointed_aknn(
     Layout: grid.json, stage1/batch=<b>/ (+ manifest_b.json),
     result/ (+ manifest_final.json). Re-running with the same workdir
     skips every batch whose manifest exists.
+
+    It runs all_knn_join's point projection, cell assignment and
+    downstream; only stage 1 differs, committed as parquet batches
+    instead of cached in memory. The same input contract holds: a null,
+    NaN or infinite coordinate fails the call with an error naming the
+    point id.
     """
     os.makedirs(workdir, exist_ok=True)
     # every parameter that changes what a committed stage-1 batch MEANS;
@@ -136,18 +141,11 @@ def checkpointed_aknn(
         )
         save_grid(workdir, grid, params=params)
 
-    cols = ["stripe_id", "sub_id", "id", "x", "y"]
-    inp = assign_cells(input_points.select("id", "x", "y"), grid).select(*cols)
-    trn = assign_cells(training_points.select("id", "x", "y"), grid).select(*cols)
-    # margin-replicated copy for stage 1 (cell-complete per batch: a
-    # replica's batch is decided by its TARGET stripe, so every batch
-    # job carries its own cells' full margin)
-    trn_s1 = (
-        assign_cells_margin(training_points.select("id", "x", "y"), grid, margin_factor)
-        .select(*cols)
-        if margin_factor > 0
-        else trn
-    )
+    # the batches commit unwidened stage-1 cells (no extra shuffle per
+    # batch job); the margin-replicated copy is cell-complete per batch:
+    # a replica's batch is decided by its TARGET stripe, so every batch
+    # job carries its own cells' full margin
+    inp, trn, trn_s1 = _cell_points(input_points, training_points, grid, margin_factor)
 
     def commit_batch(b: int) -> None:
         t0 = time.time()
@@ -208,13 +206,7 @@ def checkpointed_aknn(
     result_path = os.path.join(workdir, "result")
     if not os.path.exists(final_manifest):
         t0 = time.time()
-        cells = cells_df(spark, grid, margin_factor=margin_factor)
-        flagged = with_escape_flag(stage1, cells)
-        frontier = build_frontier(flagged, cells, grid)
-        touched = frontier.select("stripe_id", "sub_id").distinct()
-        trn_s2 = trn.join(F.broadcast(touched), ["stripe_id", "sub_id"], "left_semi")
-        stage2 = stage2_exchange(frontier, trn_s2, k)
-        result = merge_topk(flagged, stage2, k, dedup=margin_factor > 0)
+        result = _downstream(stage1, trn, grid, k, margin_factor)
         # the row count rides on the write itself: no second job
         written = Observation("result")
         result.observe(written, F.count(F.lit(1)).alias("rows")).write.mode(

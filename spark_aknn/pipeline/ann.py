@@ -44,9 +44,9 @@ The operators share one copy of each step:
     rows; near-dup probes with home = -1 and a constant cap;
   * `_topk_partial` — the one top-k kernel: dense (n_q, min(k, n_t))
     id and distance matrices;
-  * `_per_bucket` — the per-bucket cogroup against the members;
-  * the all-kNN join's `_explode_ranked` and `_rank_topk` for the final
-    ranks.
+  * the all-kNN join's `_cogroup` — the one kernel boundary, here
+    keyed by gbucket against the members — and its `_explode_ranked`
+    and `_rank_topk` for the final ranks.
 """
 
 from __future__ import annotations
@@ -58,7 +58,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from spark_aknn.aknn import _explode_ranked, _list_array, _np, _rank_topk
+from spark_aknn.aknn import _cogroup, _explode_ranked, _list_array, _np, _rank_topk
 
 # relative slack applied to ball-test comparisons; dwarfs float64 GEMM
 # and triangle-arithmetic rounding (~1e-13) while admitting only a
@@ -144,27 +144,52 @@ def _elementwise_d2(qmat: np.ndarray, cmat: np.ndarray) -> np.ndarray:
     return d2
 
 
+def _gemm_tol(d: int, qn, tn):
+    """Bound on |GEMM d2 - exact d2| for squared norms ``qn``, ``tn`` in
+    ``d`` dimensions (r01 ADVICE): the |a|^2+|b|^2-2ab rounding error
+    scales with the squared norms, so an absolute epsilon can misjudge
+    large-magnitude vectors."""
+    return d * 2.0**-50 * (qn + tn)
+
+
 def _topk_partial(qmat, ids, mat, k):
     """Exact top-k of every query row against (ids, mat): dense
     (n_q, min(k, n_t)) neighbor-id and distance matrices, each row
     (distance, id)-sorted. GEMM (|a|^2 + |b|^2 - 2ab) preselects a 4k
     candidate margin fast; the candidates are re-ranked by the exact
-    left-to-right distance, so GEMM rounding can neither reorder nor
-    (thanks to the margin) exclude a true neighbor. Queries are chunked
-    so neither the d2 matrix nor the (chunk, 4k, d) candidate block
-    exceeds _GEMM_ELEM_BUDGET elements — the full (n_q, n_t) matrix at
-    a target-size bucket (65k x 65k) would be tens of GB."""
+    left-to-right distance, so GEMM rounding cannot reorder them. A row
+    whose margin cut lies within the GEMM tolerance of its kth exact
+    distance (more than 4k candidates tie there, e.g. duplicate
+    vectors) re-ranks every training row that can reach the kth
+    distance, so the preselection never decides which tied ids win.
+    Queries are chunked so neither the d2 matrix nor the (chunk, 4k, d)
+    candidate block exceeds _GEMM_ELEM_BUDGET elements — the full
+    (n_q, n_t) matrix at a target-size bucket (65k x 65k) would be tens
+    of GB."""
     kk = min(k, len(mat))
     margin = min(4 * k, len(mat))
     out_ids = np.empty((len(qmat), kk), dtype=ids.dtype)
     out_d = np.empty((len(qmat), kk))
+    tol = _gemm_tol(mat.shape[1], (qmat * qmat).sum(axis=1), (mat * mat).sum(axis=1).max(initial=0))
     for sl in _row_slices(len(qmat), max(len(mat), margin * mat.shape[1])):
-        cand = np.argpartition(_gemm_d2(qmat[sl], mat), margin - 1, axis=1)[:, :margin]
+        d2 = _gemm_d2(qmat[sl], mat)
+        cand = np.argpartition(d2, margin - 1, axis=1)[:, :margin]
         exact = _l2_exact_ltr(qmat[sl, None, :] - mat[cand])
         cand_ids = ids[cand]
         order = np.lexsort((cand_ids, exact), axis=1)[:, :kk]
         out_ids[sl] = np.take_along_axis(cand_ids, order, axis=1)
         out_d[sl] = np.take_along_axis(exact, order, axis=1)
+        if margin == len(mat):
+            continue
+        # every row left out of the margin has d2 >= the cut, so it can
+        # tie or beat the kth exact distance only if cut - tol <= kth
+        cut = np.take_along_axis(d2, cand, axis=1).max(axis=1)
+        kth = out_d[sl, kk - 1]
+        for i in np.nonzero(cut - tol[sl] <= kth)[0]:
+            near = np.nonzero(d2[i] - tol[sl][i] <= kth[i])[0]
+            e = _l2_exact_ltr(qmat[sl][i] - mat[near])
+            o = np.lexsort((ids[near], e))[:kk]
+            out_ids[sl.start + i], out_d[sl.start + i] = ids[near][o], e[o]
     return out_ids, out_d
 
 
@@ -540,7 +565,7 @@ def _bucketed(
     previous call's caches, resolve the bucket count, train centroids,
     persist the home assignment (it feeds the salt aggregate AND every
     cogroup, r4 ADVICE) and salt hot buckets. Returns (centroid
-    broadcast, members keyed by gbucket, plan).
+    broadcast, members as (id, vec, gbucket), plan).
 
     An explicit num_centroids wins; None derives it from a corpus count
     (one metadata-cheap count job, skipped when the caller already knows
@@ -557,28 +582,7 @@ def _bucketed(
     members, plan = _salted_buckets(
         assigned, cmat.shape[0], id_col, target_bucket_rows, with_radii=with_radii
     )
-    return bc, members.drop("bucket"), plan
-
-
-def _per_bucket(
-    queries: DataFrame,
-    members: DataFrame,
-    kernel,
-    schema: str,
-    id_col: str,
-    vec_col: str,
-    vec_sql_type: str = "float",
-) -> DataFrame:
-    """Run ``kernel`` once per gbucket on (queries, members) — the one
-    cogroup every stage goes through."""
-    return (
-        queries.groupBy("gbucket")
-        .cogroup(
-            _fresh_members(members, id_col, vec_col, vec_sql_type, bucket_col="gbucket")
-            .groupBy("gbucket")
-        )
-        .applyInArrow(kernel, schema)
-    )
+    return bc, members.select(id_col, vec_col, "gbucket"), plan
 
 
 def all_pairs_l2_topk(
@@ -602,9 +606,8 @@ def all_pairs_l2_topk(
     bc, members, plan = _bucketed(
         corpus, num_centroids, id_col, vec_col, target_bucket_rows, corpus_count
     )
-    stage1 = _per_bucket(
-        members.drop("dist_c"), members, _stage1_kernel(k, id_col, vec_col),
-        _STAGE1_SCHEMA, id_col, vec_col,
+    stage1 = _cogroup(
+        members, members, ["gbucket"], _stage1_kernel(k, id_col, vec_col), _STAGE1_SCHEMA
     )
     if plan.num_global == 1:
         # one global bucket: stage 1 IS the exact all-pairs result and
@@ -622,8 +625,8 @@ def all_pairs_l2_topk(
     probes = _ball_probe(
         stage1.select("query_id", "qvec", "home", F.col("kth_dist_sq").alias("cap")), bc, plan
     )
-    stage2 = _per_bucket(
-        probes, members, _stage2_kernel(k, id_col, vec_col), _STAGE2_SCHEMA, id_col, vec_col
+    stage2 = _cogroup(
+        probes, members, ["gbucket"], _stage2_kernel(k, id_col, vec_col), _STAGE2_SCHEMA
     )
     cands = _explode_ranked(stage1, "query_id").drop("rank").unionByName(stage2)
     return _rank_topk(cands, k, "query_id")
@@ -637,24 +640,6 @@ _CACHED: list[DataFrame] = []
 def release_cached() -> None:
     while _CACHED:
         _CACHED.pop().unpersist()
-
-
-def _fresh_members(
-    assigned: DataFrame,
-    id_col: str,
-    vec_col: str,
-    vec_sql_type: str = "float",
-    bucket_col: str = "bucket",
-) -> DataFrame:
-    """Member-side projection with minted expression ids (the cogroup
-    self-join pruning trap — see _fresh_vectors)."""
-    return assigned.select(
-        (F.col(id_col) + F.lit(0)).alias(id_col),
-        F.transform(F.col(vec_col), lambda x: x + F.lit(0.0).cast(vec_sql_type)).alias(
-            vec_col
-        ),
-        (F.col(bucket_col) + F.lit(0)).alias(bucket_col),
-    )
 
 
 def ivf_topk(
@@ -695,8 +680,9 @@ def ivf_topk(
         bc = corpus.sparkSession.sparkContext.broadcast(cmat)
         # unsalted layout: the SQL twin models parent buckets only
         plan = _BucketPlan(np.ones(cmat.shape[0], dtype=np.int64), radii_g=None)
-        members = _assign_home(corpus, bc, id_col, vec_col, exact_assign=True)
-        members = members.withColumnRenamed("bucket", "gbucket")
+        members = _assign_home(corpus, bc, id_col, vec_col, exact_assign=True).select(
+            id_col, vec_col, F.col("bucket").alias("gbucket")
+        )
     else:
         # IVF probes by nprobe nearest parents, never a ball test, so
         # skip the radii aggregate
@@ -739,8 +725,8 @@ def ivf_topk(
     probes = corpus.select(id_col, vec_col).mapInArrow(q_probes, out_schema).withColumn(
         "cap", F.lit(float("inf"))
     )
-    stage2 = _per_bucket(
-        probes, members, _stage2_kernel(k, id_col, vec_col), _STAGE2_SCHEMA, id_col, vec_col
+    stage2 = _cogroup(
+        probes, members, ["gbucket"], _stage2_kernel(k, id_col, vec_col), _STAGE2_SCHEMA
     )
     # every member has exactly one home bucket, so (query, neighbor) is
     # already unique across probed buckets — no dedup shuffle needed
@@ -837,13 +823,8 @@ def embedding_near_dup_pairs(
         t_ids = _np(ttbl, id_col)
         tmat = _vec_matrix(ttbl.column(vec_col))
         d2 = _gemm_d2(qmat, tmat)
-        # norm-scaled GEMM tolerance (r01 ADVICE): the |a|^2+|b|^2-2ab
-        # rounding error scales with the squared norms, so an absolute
-        # epsilon can exclude boundary pairs for large-magnitude vectors
-        eps = (
-            qmat.shape[1]
-            * 2.0**-50
-            * ((qmat * qmat).sum(axis=1)[:, None] + (tmat * tmat).sum(axis=1)[None, :])
+        eps = _gemm_tol(
+            qmat.shape[1], (qmat * qmat).sum(axis=1)[:, None], (tmat * tmat).sum(axis=1)[None, :]
         )
         cand_q, cand_t = np.nonzero(d2 <= max_dist_sq + eps)
         keep = q_ids[cand_q] < t_ids[cand_t]  # a < b, no self
@@ -861,7 +842,7 @@ def embedding_near_dup_pairs(
             schema=_PAIRS_PA,
         )
 
-    return _per_bucket(probes, members, pair_kernel, _PAIRS_SCHEMA, id_col, vec_col, vec_sql_type)
+    return _cogroup(probes, members, ["gbucket"], pair_kernel, _PAIRS_SCHEMA)
 
 
 def _normalized(corpus: DataFrame, id_col: str, vec_col: str) -> DataFrame:

@@ -52,6 +52,7 @@ from spark_aknn.media import (
     encode_jpeg_lite,
     psnr,
 )
+from spark_aknn.localrel import _sql_double
 from spark_aknn.pipeline.dedup import simhash_near_dup_pairs
 
 DEFAULT_NSEEDS = 100
@@ -170,14 +171,6 @@ def _constants(nseeds: int, nvariants: int, side: int, quality: int):
         for s in range(nseeds)
         for v in range(nvariants)
     ]
-
-
-def _sql_double(x: float) -> str:
-    # repr() is the shortest round-trip decimal; the string->DOUBLE cast
-    # forces DuckDB's float64 parser (a bare decimal literal would type
-    # as DECIMAL and perturb the low bits), so the oracle constant is
-    # bit-identical to the float64 the Spark kernel computes
-    return f"CAST('{float(x)!r}' AS DOUBLE)"
 
 
 def _const_cte(nseeds: int, nvariants: int, side: int, quality: int) -> str:

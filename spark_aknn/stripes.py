@@ -55,29 +55,14 @@ def auto_num_stripes(training_count: int, k: int, parallelism: int) -> int:
     return max(1, min(training_count, max(parallelism, s)))
 
 
-def assign_stripes(df: DataFrame, splits: list[float], col: str = "y", out: str = "stripe_id") -> DataFrame:
-    """Add an integer stripe id via JVM-side binary search (Bucketizer).
-
-    Bucket i covers [splits[i], splits[i+1]) — the reference's half-open
-    stripe ranges (AllKnnResultStripesParallel.h:103-113).
-    """
-    from pyspark.sql import functions as F
-
-    if len(splits) == 2:
-        return df.withColumn(out, F.lit(0))
-    bucketizer = Bucketizer(splits=splits, inputCol=col, outputCol=out + "__d")
-    return (
-        bucketizer.transform(df)
-        .withColumn(out, F.col(out + "__d").cast("int"))
-        .drop(out + "__d")
-    )
-
-
 def assign_stripes_multi(
     df: DataFrame, splits: list[float], cols: list[str], outs: list[str]
 ) -> DataFrame:
-    """Bucketize several columns against the same splits in one pass
-    (used by the boundary exchange for y-r / y+r range ends)."""
+    """Integer stripe ids for ``cols`` via JVM-side binary search
+    (Bucketizer), all against the same splits in one pass: bucket i
+    covers [splits[i], splits[i+1]) — the reference's half-open stripe
+    ranges (AllKnnResultStripesParallel.h:103-113). The grid assigns
+    y alone; the boundary exchange assigns its y-r / y+r range ends."""
     from pyspark.sql import functions as F
 
     if len(splits) == 2:

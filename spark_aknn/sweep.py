@@ -1,4 +1,4 @@
-"""Stage-1 plane-sweep kernel — vectorized numpy kNN inside applyInPandas.
+"""Stage-1 plane-sweep kernel — vectorized numpy kNN inside applyInArrow.
 
 Reference semantics re-expressed (not ported):
   * x-sorted sweep with bidirectional expansion and the dx^2 >= kth prune

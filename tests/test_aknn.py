@@ -325,6 +325,38 @@ def test_negative_int64_ids(spark, rng):
     assert (got.dist_sq.values.reshape(-1, 10) == exp_d).all()
 
 
+@pytest.mark.parametrize(
+    "operator, bad_side, col, value",
+    [
+        ("join", "both", "x", float("nan")),
+        ("join", "training", "y", float("inf")),
+        ("join", "input", "y", None),
+        ("checkpointed", "both", "x", float("nan")),
+    ],
+)
+def test_non_finite_coordinates_raise(spark, rng, tmp_path, operator, bad_side, col, value):
+    """A null, NaN or infinite coordinate fails both all-kNN operators
+    with an error naming the point id. A NaN point in a 2,001-point
+    self-join (k = 5) used to vanish silently: 10,000 rows, no error,
+    and the point was nobody's neighbour."""
+    from pyspark.sql import functions as F
+
+    from spark_aknn.manifest import checkpointed_aknn
+
+    n = 2001
+    good = make_points_df(spark, np.arange(1, n + 1), rng.random(n), rng.random(n))
+    bad = good.withColumn(
+        col, F.when(F.col("id") == 8, F.lit(value).cast("double")).otherwise(F.col(col))
+    )
+    inp = good if bad_side == "training" else bad
+    trn = good if bad_side == "input" else bad
+    with pytest.raises(Exception, match="null or non-finite coordinate at point id 8"):
+        if operator == "join":
+            all_knn_join(inp, trn, k=5).collect()
+        else:
+            checkpointed_aknn(spark, inp, trn, str(tmp_path / "ckpt"), k=5).collect()
+
+
 def test_k1_and_single_point(spark):
     _check(spark, [1, 2], [0.1, 0.9], [0.1, 0.9], [7], [0.5], [0.5], k=1)
 

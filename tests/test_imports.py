@@ -1,7 +1,8 @@
-"""Every ``from spark_aknn... import name`` in the repo's scripts, tools,
-benchmark and tests resolves to a module or a top-level name of the
-package — read from source with ``ast``, no Spark needed — so deleting
-engine code cannot strand an importer."""
+"""Every ``from spark_aknn... import name`` and every ``<engine
+module>.<name>`` in the repo's scripts, tools, benchmark and tests
+resolves to a module or a top-level name of the package — read from
+source with ``ast``, no Spark needed — so deleting or renaming engine
+code cannot strand a caller."""
 
 from __future__ import annotations
 
@@ -80,6 +81,72 @@ def test_engine_imports_resolve():
             name in _top_level_names(module_file) or _module_file(f"{module}.{name}")
         ):
             stranded.append(f"{path}:{line}: {module} has no {name}")
+    assert not stranded, "\n".join(stranded)
+
+
+def _dotted(node: ast.AST) -> str | None:
+    """``a.b.c`` for a chain of names and attributes, else None."""
+    if isinstance(node, ast.Name):
+        return node.id
+    if isinstance(node, ast.Attribute):
+        base = _dotted(node.value)
+        return base and f"{base}.{node.attr}"
+    return None
+
+
+def _module_aliases(tree: ast.Module) -> dict[str, str]:
+    """Local name -> engine module, for every engine module the file
+    binds by an import and never rebinds."""
+    aliases, rebound = {}, set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and (node.module or "").startswith("spark_aknn"):
+            for a in node.names:
+                if _module_file(f"{node.module}.{a.name}"):
+                    aliases[a.asname or a.name] = f"{node.module}.{a.name}"
+        elif isinstance(node, ast.Import):
+            for a in node.names:
+                if a.name.split(".")[0] == "spark_aknn":
+                    aliases[a.asname or "spark_aknn"] = a.name if a.asname else "spark_aknn"
+        elif isinstance(node, ast.Name) and isinstance(node.ctx, ast.Store):
+            rebound.add(node.id)
+        elif isinstance(node, ast.arg):
+            rebound.add(node.arg)
+    return {k: v for k, v in aliases.items() if k not in rebound}
+
+
+def test_engine_module_attributes_resolve():
+    """``aknn._sorted_training``, ``ann.release_cached`` and the like —
+    perfbench reaches the engine through module attributes, which the
+    import check above cannot see. Also covers ``setattr(module,
+    "name", ...)`` as tests monkeypatch it."""
+    seen, stranded = 0, []
+    for path in _importer_files():
+        tree = _parse(path)
+        aliases = _module_aliases(tree)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Attribute):
+                owner, attr = _dotted(node.value), node.attr
+            elif (
+                isinstance(node, ast.Call)
+                and getattr(node.func, "attr", None) == "setattr"
+                and len(node.args) >= 2
+                and isinstance(node.args[1], ast.Constant)
+            ):
+                owner, attr = _dotted(node.args[0]), node.args[1].value
+            else:
+                continue
+            head, _, rest = (owner or "").partition(".")
+            if head not in aliases or attr.startswith("__"):
+                continue
+            module = aliases[head] + (f".{rest}" if rest else "")
+            module_file = _module_file(module)
+            if module_file is None:
+                continue
+            seen += 1
+            if attr not in _top_level_names(module_file) and not _module_file(f"{module}.{attr}"):
+                rel = os.path.relpath(path, REPO)
+                stranded.append(f"{rel}:{node.lineno}: {module} has no {attr}")
+    assert seen > 0
     assert not stranded, "\n".join(stranded)
 
 

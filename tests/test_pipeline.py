@@ -128,18 +128,22 @@ def test_ann_exact_matches_numpy(emb):
 
 def test_topk_partial_matches_brute_force(monkeypatch):
     """The dense top-k kernel against a brute force under the (dist, id)
-    rule, bit for bit: duplicate vectors tie and break by id, a k above
+    rule, bit for bit: duplicate vectors tie and break by id — also when
+    more copies tie than the kernel's 4k GEMM margin holds — a k above
     the bucket size returns the whole bucket, and a small element budget
     forces several query chunks."""
     from spark_aknn.pipeline import ann
 
     rng = np.random.default_rng(11)
-    mat = rng.normal(size=(60, 6)).astype(np.float32).astype(np.float64)
-    mat[10:14] = mat[3]  # five copies of one vector
+    base = rng.normal(size=(60, 6)).astype(np.float32).astype(np.float64)
     ids = rng.permutation(1000)[:60].astype(np.int64)
-    qmat = np.vstack([mat[:20], rng.normal(size=(25, 6))])
+    extra = rng.normal(size=(25, 6))
+    five = base.copy()
+    five[10:14] = five[3]  # five copies of one vector
+    many = base.copy()
+    many[20:45] = many[3]  # 26 copies: more than the 4k = 12 margin at k = 3
 
-    def brute(q, k):
+    def brute(mat, q, k):
         # left-to-right sum of squares, like the SQL twin
         d = np.array([sum((a - b) * (a - b) for a, b in zip(q, m)) for m in mat])
         order = sorted(range(len(mat)), key=lambda i: (d[i], ids[i]))[:k]
@@ -148,21 +152,23 @@ def test_topk_partial_matches_brute_force(monkeypatch):
     calls = []
     gemm = ann._gemm_d2
     monkeypatch.setattr(ann, "_gemm_d2", lambda a, b: calls.append(len(a)) or gemm(a, b))
-    for budget in (ann._GEMM_ELEM_BUDGET, 600):
-        monkeypatch.setattr(ann, "_GEMM_ELEM_BUDGET", budget)
-        for k in (3, 10, 70):
-            calls.clear()
-            got_ids, got_d = ann._topk_partial(qmat, ids, mat, k)
-            assert got_ids.shape == got_d.shape == (len(qmat), min(k, len(mat)))
-            for qi, q in enumerate(qmat):
-                want_ids, want_d = brute(q, k)
-                assert np.array_equal(got_ids[qi], want_ids)
-                assert np.array_equal(got_d[qi], want_d)
-            assert (len(calls) > 1) == (budget == 600)
-    # the copies of mat[3] tie at distance 0; the smallest ids win
-    got_ids, got_d = ann._topk_partial(mat[3:4], ids, mat, 3)
-    assert (got_d == 0).all()
-    assert list(got_ids[0]) == sorted(ids[[3, 10, 11, 12, 13]])[:3]
+    for mat, tied in ((five, [3, 10, 11, 12, 13]), (many, [3, *range(20, 45)])):
+        qmat = np.vstack([mat[:20], extra])
+        for budget in (ann._GEMM_ELEM_BUDGET, 600):
+            monkeypatch.setattr(ann, "_GEMM_ELEM_BUDGET", budget)
+            for k in (3, 10, 70):
+                calls.clear()
+                got_ids, got_d = ann._topk_partial(qmat, ids, mat, k)
+                assert got_ids.shape == got_d.shape == (len(qmat), min(k, len(mat)))
+                for qi, q in enumerate(qmat):
+                    want_ids, want_d = brute(mat, q, k)
+                    assert np.array_equal(got_ids[qi], want_ids)
+                    assert np.array_equal(got_d[qi], want_d)
+                assert (len(calls) > 1) == (budget == 600)
+        # the copies of mat[3] tie at distance 0; the smallest ids win
+        got_ids, got_d = ann._topk_partial(mat[3:4], ids, mat, 3)
+        assert (got_d == 0).all()
+        assert list(got_ids[0]) == sorted(ids[tied])[:3]
 
 
 def test_auto_num_centroids_policy():

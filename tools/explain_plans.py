@@ -75,7 +75,7 @@ def main():
     # the done-path reads must have NO window exchange, and the cell /
     # margin metadata joins must all be broadcast
     uni = points_from_keys(spark.read.parquet(f"{SF}/customer.parquet"), "c_custkey")
-    knn_u = all_knn_join(uni, uni, k=5, num_stripes=8, persist=False)
+    knn_u = all_knn_join(uni, uni, k=5, num_stripes=8)
     p5 = plan_of(knn_u)
     sections.append(("all_knn_join (margin-replicated, 8 stripes)", p5))
     checks.append(("margin/cell metadata joins are all broadcast (no shuffle joins in the kNN plan)",
@@ -135,7 +135,7 @@ def main():
     for title, plan in sections:
         lines.append(f"## {title}\n")
         lines.append("```")
-        lines.append(plan.strip()[:4000])
+        lines.append(plan.strip())
         lines.append("```")
         lines.append("")
     with open(REPO / "PLANS.md", "w") as f:
