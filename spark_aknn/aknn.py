@@ -374,26 +374,35 @@ def merge_topk(
     return done.unionByName(_rank_topk(allc, k))
 
 
+def _checked_points(df: DataFrame) -> DataFrame:
+    """(id, x, y) whose x and y raise an error naming the point id when
+    either coordinate is null, NaN or infinite — the input check of the
+    all-kNN operators and the radius join, which would otherwise drop or
+    misplace the point silently. It rides in the projection: no extra
+    job."""
+    ok = (F.abs("x") < float("inf")) & (F.abs("y") < float("inf"))  # null/NaN/inf fail
+    err = F.raise_error(F.format_string("null or non-finite coordinate at point id %s", "id"))
+    return df.select("id", *[F.when(ok, F.col(c)).otherwise(err).alias(c) for c in ("x", "y")])
+
+
+def _check_margin(margin_factor: float) -> None:
+    """NaN margins make every escape comparison false, certifying
+    queries against coverage that was never replicated; a negative one
+    shrinks the cells. Both are rejected before any Spark job."""
+    if not margin_factor >= 0:
+        raise ValueError(f"margin_factor must be a number >= 0, got {margin_factor!r}")
+
+
 def _cell_points(
     inputs: DataFrame, training: DataFrame, grid: Grid, margin_factor: float, widen=lambda df: df
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """The point projection and cell assignment of both all-kNN
     operators: (input cells, home-assigned training cells, training
     cells margin-replicated for stage 1), each (stripe_id, sub_id, id,
-    x, y). ``widen`` wraps the stage-1 map side only.
-
-    A null, NaN or infinite coordinate on either side raises an error
-    naming the point id — the sweep would otherwise drop the point
-    silently (no neighbours, never a neighbour). The check rides in the
-    projection: no extra job."""
-    ok = (F.abs("x") < float("inf")) & (F.abs("y") < float("inf"))  # null/NaN/inf fail
-    err = F.raise_error(F.format_string("null or non-finite coordinate at point id %s", "id"))
-
-    def checked(df: DataFrame) -> DataFrame:
-        return df.select("id", *[F.when(ok, F.col(c)).otherwise(err).alias(c) for c in ("x", "y")])
-
+    x, y). ``widen`` wraps the stage-1 map side only. Both sides pass
+    _checked_points."""
     cols = [*_CELL_KEYS, "id", "x", "y"]
-    inp, trn = checked(inputs), checked(training)
+    inp, trn = _checked_points(inputs), _checked_points(training)
     return (
         assign_cells(widen(inp), grid).select(*cols),
         assign_cells(trn, grid).select(*cols),
@@ -504,8 +513,6 @@ def all_knn_join(
     k: int = 10,
     num_stripes: int = 0,
     grid: Grid | None = None,
-    salt_factor: float = 4.0,
-    split_on: str = "training",
     margin_factor: float = 0.9,
     eager_stats_max_rows: int = 2_000_000,
 ) -> DataFrame:
@@ -514,18 +521,15 @@ def all_knn_join(
     Every coordinate must be finite: a null, NaN or infinite x or y on
     either side fails the join with an error naming the point id.
 
-    num_stripes=0 picks round(sqrt(|T|)/sqrt(k)) like the reference
-    (AllKnnResultStripes.h:141-151); grid.plan_grid plans the grid and
-    clamps any stripe count to QUANTILE_GRID // 2 (8192).
+    The grid comes from grid.plan_grid on the training side unless
+    ``grid`` is given: num_stripes=0 picks round(sqrt(|T|)/sqrt(k)) like
+    the reference (AllKnnResultStripes.h:141-151), and any stripe count
+    is clamped to QUANTILE_GRID // 2 (8192). Results are identical for
+    ANY grid (the boundary exchange is exact); the grid only steers
+    balance and stage-2 traffic.
 
-    split_on selects which side the stripe boundaries are computed on —
-    "training" (default) or "input" — mirroring the reference's
-    splitByT flag (AllKnnResultStripes.h:317-423, algorithm ids 18-25).
-    Results are identical either way (the boundary exchange is exact for
-    ANY partitioning); the choice only steers balance when the two
-    sides' y-distributions diverge.
-
-    margin_factor: training points replicate into neighbor cells within
+    margin_factor (a number >= 0, else ValueError before any Spark
+    job): training points replicate into neighbor cells within
     margin_factor x the stripe height (assign_cells_margin) so stage 1
     certifies ~99% of queries locally instead of ~2% — at the
     reference's own stripe formula the stripe height ~ the expected kth
@@ -541,22 +545,13 @@ def all_knn_join(
 
     Stage 1 is cached in memory; eager_stats_max_rows bounds the planned
     training count up to which the downstream takes its eager-stats
-    shape (see _downstream).
+    shape (see _downstream). A caller's ``grid`` takes the lazy shape.
     """
-    if split_on not in ("training", "input"):
-        raise ValueError(f"split_on must be 'training' or 'input', got {split_on!r}")
+    _check_margin(margin_factor)
     par = input_points.sparkSession.sparkContext.defaultParallelism
-    split_side = training_points if split_on == "training" else input_points
     n_trn: int | None = None
     if grid is None:
-        grid, n_trn = plan_grid(
-            split_side,
-            k,
-            num_stripes,
-            training=training_points if split_on == "input" else None,
-            salt_factor=salt_factor,
-            margin_factor=margin_factor,
-        )
+        grid, n_trn = plan_grid(training_points, k, num_stripes, margin_factor)
 
     def widen(df: DataFrame) -> DataFrame:
         # parallelism floor for the stage-1 map side only (it runs once,

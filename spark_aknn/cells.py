@@ -20,21 +20,18 @@ import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from spark_aknn.raster import _axis_idx
+
 MAX_LEVEL = 30
 
 
-def _clamped_int(coord: Column, level: int) -> Column:
-    n = 1 << level
-    i = F.floor(coord * F.lit(float(n))).cast("long")
-    return F.least(F.greatest(i, F.lit(0)), F.lit(n - 1))
-
-
 def cell_id(x: Column, y: Column, level: int) -> Column:
-    """Morton cell id of (x, y) at ``level`` (level in 1..30)."""
+    """Morton cell id of (x, y) at ``level`` (level in 1..30). A null,
+    NaN or infinite coordinate raises (raster._axis_idx)."""
     if not 1 <= level <= MAX_LEVEL:
         raise ValueError(f"level must be in 1..{MAX_LEVEL}")
-    xi = _clamped_int(x, level)
-    yi = _clamped_int(y, level)
+    xi = _axis_idx(x, 1 << level)
+    yi = _axis_idx(y, 1 << level)
     acc: Column | None = None
     for i in range(level):
         xb = F.shiftleft(F.shiftrightunsigned(xi, i).bitwiseAND(F.lit(1)), 2 * i + 1)

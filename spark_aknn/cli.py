@@ -4,8 +4,9 @@ Mirrors the reference CLI's parameter surface
 (/root/reference/PlaneSweepParallel/src/PlaneSweepParallel.cpp:40-133:
 k, input file, training file, threads, accuracy, numStripes(0=auto),
 saveToFile, algorithm bitstring, memory MB) collapsed onto one engine
-with config knobs — the 30-variant bitstring becomes
---num-stripes/--salt-factor/--oracle flags.
+with config knobs — the 30-variant bitstring becomes the
+--num-stripes and --margin-factor flags, and --workdir selects the
+resumable checkpointed run.
 
 Usage (multi-executor cluster):
     spark-submit --py-files spark_aknn.zip -m spark_aknn.cli \
@@ -53,10 +54,9 @@ def main(argv: list[str] | None = None) -> None:
     p.add_argument("--synthetic", type=int, help="generate N deterministic uniform points instead")
     p.add_argument("--k", type=int, default=10)
     p.add_argument("--num-stripes", type=int, default=0, help="0 = auto (sqrt(|T|/k), the reference formula)")
-    p.add_argument("--salt-factor", type=float, default=4.0)
     p.add_argument(
         "--margin-factor", type=float, default=0.9,
-        help="training overlap margin as a fraction of stripe height; "
+        help="training overlap margin as a fraction of stripe height, a number >= 0; "
         "0 = pure reference partitioning (full boundary exchange)",
     )
     p.add_argument("--output", required=True, help="parquet output path (or .bin/.txt with --convert)")
@@ -106,13 +106,11 @@ def main(argv: list[str] | None = None) -> None:
         if args.workdir:
             result = checkpointed_aknn(
                 spark, inp, trn, args.workdir, k=args.k,
-                num_stripes=args.num_stripes, salt_factor=args.salt_factor,
-                margin_factor=args.margin_factor,
+                num_stripes=args.num_stripes, margin_factor=args.margin_factor,
             )
         else:
             result = all_knn_join(
-                inp, trn, k=args.k, num_stripes=args.num_stripes,
-                salt_factor=args.salt_factor, margin_factor=args.margin_factor,
+                inp, trn, k=args.k, num_stripes=args.num_stripes, margin_factor=args.margin_factor
             )
         result.observe(written, F.count(F.lit(1)).alias("rows")).write.mode(
             "overwrite"

@@ -3,12 +3,13 @@
 Level 1 re-expresses the reference's equal-count y-stripes
 (/root/reference/PlaneSweepParallel/include/AllKnnResultStripesParallel.h:36-142).
 Level 2 is our skew treatment ("salting"): a stripe whose training count
-exceeds a threshold is sub-split on x-quantiles into substripes, each a
-rectangle cell. The reference load-balances skewed stripes with dynamic
-OpenMP/TBB scheduling (PlaneSweepStripesParallelAlgorithm.h:81) — on
-Spark the unit of balance is the shuffle partition, so we split the data
-itself. A cell is the unit of cogrouping; substripe count 1 everywhere
-degenerates to the reference's pure stripe model.
+exceeds SALT_FACTOR times the mean is sub-split on x-quantiles into
+substripes, each a rectangle cell. The reference load-balances skewed
+stripes with dynamic OpenMP/TBB scheduling
+(PlaneSweepStripesParallelAlgorithm.h:81) — on Spark the unit of balance
+is the shuffle partition, so we split the data itself. A cell is the unit of cogrouping; substripe count 1 everywhere
+degenerates to the reference's pure stripe model. plan_grid is the one
+way in: it counts, sketches and builds every grid the operators run.
 
 The cell table is tiny (O(#cells)) and driver-resident; it is broadcast
 for (a) attaching each point's cell id, (b) the boundary-exchange
@@ -74,25 +75,20 @@ MAX_SUBS = 32
 # how many times the expected kth radius a stripe's margin must cover
 # for the anisotropy merge (splits_from_sketch) to leave it unmerged
 ANISOTROPY_SAFETY = 1.3
+# a fused stripe is salted when its training count exceeds this many
+# times the mean stripe count
+SALT_FACTOR = 4.0
 
 
-def count_and_extent(
-    df: DataFrame, x_col: str = "x"
-) -> tuple[int, tuple[float, float] | None]:
+def count_and_extent(df: DataFrame) -> tuple[int, tuple[float, float] | None]:
     """(row count, x extent) in one cheap codegen aggregate. The x
     min/max ride along for the anisotropy-aware stripe merge, which
     needs the cross-dimension extent to estimate 2-D density from the
     1-D y-sketch."""
-    aggs = [F.count(F.lit(1)).alias("n")]
-    has_x = x_col is not None and x_col in df.columns
-    if has_x:
-        aggs += [F.min(x_col).alias("xlo"), F.max(x_col).alias("xhi")]
-    row = df.agg(*aggs).collect()[0]
-    extent = (
-        (float(row["xlo"]), float(row["xhi"]))
-        if has_x and row["xlo"] is not None
-        else None
-    )
+    row = df.agg(
+        F.count(F.lit(1)).alias("n"), F.min("x").alias("xlo"), F.max("x").alias("xhi")
+    ).collect()[0]
+    extent = (float(row["xlo"]), float(row["xhi"])) if row["xlo"] is not None else None
     return int(row["n"]), extent
 
 
@@ -180,7 +176,9 @@ def splits_from_sketch(
             if not inner or q > inner[-1]:
                 inner.append(q)
         return [NEG_INF, *inner, POS_INF]
-    beta = (ANISOTROPY_SAFETY**2) * k * wx / ((margin_factor**2 if margin_factor > 0 else 1.0) * math.pi)
+    m2 = margin_factor**2 if margin_factor > 0 else 1.0
+    # a margin whose square underflows to 0 can contain no kth circle
+    beta = (ANISOTROPY_SAFETY**2) * k * wx / (m2 * math.pi) if m2 > 0 else POS_INF
     target = n / num_stripes
     mass_q = n / m  # mass of each sketch gap (and of each open tail)
     inner = []
@@ -198,84 +196,62 @@ def splits_from_sketch(
 
 
 def plan_grid(
-    split_side: DataFrame,
-    k: int | None,
-    num_stripes: int = 0,
-    training: DataFrame | None = None,
-    salt_factor: float = 4.0,
-    margin_factor: float = 0.9,
+    training: DataFrame, k: int | None, num_stripes: int = 0, margin_factor: float = 0.9
 ) -> tuple[Grid, int]:
-    """Plan the grid of an all-kNN join on ``split_side``'s points: the
+    """Plan the grid of an all-kNN join on ``training``'s points: the
     one planning path behind every operator.
 
     One count+extent aggregate, then the auto stripe count when
-    ``num_stripes`` <= 0 (the reference's sqrt(|T|/k); ``training`` is
-    counted for it when the split side is not the training side), the
-    clamp to QUANTILE_GRID // 2, one quantile sketch sized to the stripe
-    count, and build_grid with the anisotropy arguments.
+    ``num_stripes`` <= 0 (the reference's sqrt(|T|/k)), the clamp to
+    QUANTILE_GRID // 2, one quantile sketch sized to the stripe count
+    (sketch_resolution), and build_grid with the anisotropy arguments.
+    ``k=None`` plans plain equal-count stripes (no anisotropy merge).
 
-    Returns (grid, rows counted): |T| when ``training`` was counted,
-    else the split side's count."""
-    n, x_extent = count_and_extent(split_side)
-    n_counted = n
+    Returns (grid, |T|)."""
+    n, x_extent = count_and_extent(training)
     if num_stripes <= 0:
-        if training is not None:
-            n_counted = training.count()
-        par = split_side.sparkSession.sparkContext.defaultParallelism
-        num_stripes = auto_num_stripes(n_counted, k, par)
+        par = training.sparkSession.sparkContext.defaultParallelism
+        num_stripes = auto_num_stripes(n, k, par)
     num_stripes = min(num_stripes, QUANTILE_GRID // 2)
+    sketch = quantile_sketch(training, "y", sketch_resolution(num_stripes))
     grid = build_grid(
-        split_side,
-        num_stripes,
-        salt_factor=salt_factor,
-        sketch=quantile_sketch(split_side, "y", sketch_resolution(num_stripes)),
-        k=k,
-        x_extent=x_extent,
-        margin_factor=margin_factor,
-        n_total=n,
+        training, num_stripes, sketch, k=k, x_extent=x_extent, margin_factor=margin_factor, n_total=n
     )
-    return grid, n_counted
+    return grid, n
 
 
 def build_grid(
     training: DataFrame,
     num_stripes: int,
-    salt_factor: float = 4.0,
-    sketch: list[float] | None = None,
+    sketch: list[float],
     k: int | None = None,
     x_extent: tuple[float, float] | None = None,
     margin_factor: float = 0.9,
     n_total: int | None = None,
 ) -> Grid:
-    """Quantile y-splits; oversized stripes (> salt_factor * mean count)
-    get x-quantile substripes sized to bring them back to ~mean.
+    """The grid of a planned sketch: quantile y-splits resampled from
+    ``sketch``; oversized stripes (> SALT_FACTOR * mean count) get
+    x-quantile substripes sized to bring them back to ~mean.
 
-    One boundary path: ``num_stripes`` is clamped to QUANTILE_GRID // 2
-    and the boundaries are resampled from an equal-mass quantile sketch
-    with >= 2 gaps per stripe. A caller's sketch is used as is (zero
-    scans); with none, or one too coarse for the clamped stripe count,
-    the grid is planned afresh by plan_grid (one count+extent aggregate
-    and one sketch of ``training``). An empty sketch means a side with
-    no y values: one stripe. The per-stripe salt-count scan runs ONLY
-    when boundary fusion or the anisotropy merge signals skewed data —
-    with all distinct quantiles and no merging, equal-count splits are
-    balanced by construction.
+    ``num_stripes`` is clamped to QUANTILE_GRID // 2, and ``sketch`` (an
+    equal-mass quantile sketch of ``training``'s y) must have >= 2 gaps
+    per clamped stripe: sketch_resolution sizes one, and plan_grid plans
+    the whole grid. A coarser sketch raises ValueError. An empty sketch
+    means a side with no y values: one stripe. The per-stripe salting
+    scan runs ONLY when boundary fusion or the anisotropy merge signals
+    skewed data — with all distinct quantiles and no merging,
+    equal-count splits are balanced by construction.
 
     (k, x_extent, n_total): enables the anisotropy merge in
     splits_from_sketch — stripes tall enough that typical kth circles
     fit their own margin (see splits_from_sketch; exactness never
-    depends on it). Callers passing their own sketch should pass all
-    three."""
+    depends on it)."""
     num_stripes = min(num_stripes, QUANTILE_GRID // 2)
-    if sketch is None or (sketch and 2 * num_stripes > len(sketch) + 1):
-        grid, _ = plan_grid(
-            training,
-            k,
-            num_stripes,
-            salt_factor=salt_factor,
-            margin_factor=margin_factor,
+    if sketch and 2 * num_stripes > len(sketch) + 1:
+        raise ValueError(
+            f"a {len(sketch) + 1}-gap sketch is too coarse for {num_stripes} stripes: size it "
+            "with sketch_resolution(num_stripes), or plan the grid with plan_grid"
         )
-        return grid
     y_splits = splits_from_sketch(
         sketch,
         num_stripes,
@@ -287,7 +263,7 @@ def build_grid(
     grid = Grid(y_splits=y_splits)
     actual = len(y_splits) - 1
     fused = actual < num_stripes
-    if actual <= 1 or salt_factor <= 0 or not fused:
+    if actual <= 1 or not fused:
         return grid
     # per-stripe masses estimated DRIVER-SIDE from the equal-mass sketch
     # (each sketch gap carries ~n/m rows, so gaps-per-stripe are relative
@@ -300,7 +276,7 @@ def build_grid(
     if total == 0:
         return grid
     mean = total / actual
-    hot = {s: c for s, c in counts.items() if c > salt_factor * mean}
+    hot = {s: c for s, c in counts.items() if c > SALT_FACTOR * mean}
     if not hot:
         return grid
     striped = assign_stripes_multi(training, y_splits, ["y"], ["stripe_id"])
@@ -364,25 +340,25 @@ def stripe_margins(grid: Grid, margin_factor: float) -> tuple[list[float], list[
 
 
 def cells_df(spark: SparkSession, grid: Grid, margin_factor: float = 0.0) -> DataFrame:
-    """Broadcastable cell table. Columns m_ylo/m_yhi/m_xlo/m_xhi are the
-    MARGIN-EXPANDED rectangle each cell's training is guaranteed to
-    cover under assign_cells_margin(margin_factor) — the escape test
-    must use these; frontier targeting keeps the original bounds (stage
-    2's training side is home-assigned, not replicated)."""
-    if margin_factor <= 0:
-        rows = [(*c, c[2], c[3], c[4], c[5]) for c in grid.cells()]
-    else:
-        below, above, radius = stripe_margins(grid, margin_factor)
-        rows = []
-        for (s, j, ylo, yhi, xlo, xhi) in grid.cells():
-            dx = radius[s]
-            rows.append((
-                s, j, ylo, yhi, xlo, xhi,
-                ylo - below[s] if ylo != NEG_INF else NEG_INF,
-                yhi + above[s] if yhi != POS_INF else POS_INF,
-                xlo - dx if xlo != NEG_INF else NEG_INF,
-                xhi + dx if xhi != POS_INF else POS_INF,
-            ))
+    """Broadcastable cell table, one row per cell. Columns
+    m_ylo/m_yhi/m_xlo/m_xhi are the MARGIN-EXPANDED rectangle each
+    cell's training is guaranteed to cover under
+    assign_cells_margin(margin_factor): the plain bounds widened by
+    stripe_margins' widths, so at margin_factor 0 they equal the plain
+    bounds. The escape test must use these; frontier targeting keeps the
+    original bounds (stage 2's training side is home-assigned, not
+    replicated). ``margin_factor`` must be >= 0."""
+    below, above, radius = stripe_margins(grid, margin_factor)
+    rows = []
+    for (s, j, ylo, yhi, xlo, xhi) in grid.cells():
+        dx = radius[s]
+        rows.append((
+            s, j, ylo, yhi, xlo, xhi,
+            ylo - below[s] if ylo != NEG_INF else NEG_INF,
+            yhi + above[s] if yhi != POS_INF else POS_INF,
+            xlo - dx if xlo != NEG_INF else NEG_INF,
+            xhi + dx if xhi != POS_INF else POS_INF,
+        ))
     return local_df(
         spark,
         rows,

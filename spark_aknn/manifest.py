@@ -41,8 +41,8 @@ from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from spark_aknn.aknn import _cell_points, _downstream, stage1_local_topk
-from spark_aknn.grid import Grid, plan_grid
+from spark_aknn.aknn import _cell_points, _check_margin, _downstream, stage1_local_topk
+from spark_aknn.grid import SALT_FACTOR, Grid, plan_grid
 
 
 def _write_json_atomic(path: str, obj: dict) -> None:
@@ -105,7 +105,6 @@ def checkpointed_aknn(
     k: int = 10,
     num_stripes: int = 0,
     num_batches: int = 4,
-    salt_factor: float = 4.0,
     margin_factor: float = 0.9,
 ) -> DataFrame:
     """All-kNN join with per-batch checkpoint/resume under ``workdir``.
@@ -118,27 +117,24 @@ def checkpointed_aknn(
     downstream; only stage 1 differs, committed as parquet batches
     instead of cached in memory. The same input contract holds: a null,
     NaN or infinite coordinate fails the call with an error naming the
-    point id.
+    point id, and a margin_factor that is not a number >= 0 raises
+    ValueError before any Spark job.
     """
+    _check_margin(margin_factor)
     os.makedirs(workdir, exist_ok=True)
     # every parameter that changes what a committed stage-1 batch MEANS;
-    # validated against the workdir on resume (r3 ADVICE medium)
+    # validated against the workdir on resume (r3 ADVICE medium); the
+    # salting threshold is a constant, kept so older workdirs still match
     params = {
         "k": k,
         "num_stripes_requested": num_stripes,
         "num_batches": num_batches,
-        "salt_factor": salt_factor,
+        "salt_factor": SALT_FACTOR,
         "margin_factor": margin_factor,
     }
     grid = load_grid(workdir, params=params)
     if grid is None:
-        grid, _ = plan_grid(
-            training_points,
-            k,
-            num_stripes,
-            salt_factor=salt_factor,
-            margin_factor=margin_factor,
-        )
+        grid, _ = plan_grid(training_points, k, num_stripes, margin_factor)
         save_grid(workdir, grid, params=params)
 
     # the batches commit unwidened stage-1 cells (no extra shuffle per

@@ -25,9 +25,15 @@ from spark_aknn.pip import points_in_polygon_col
 
 
 def _axis_idx(coord: Column, tiles_per_side: int) -> Column:
+    """Tile index of ``coord`` on one axis: floor(coord * T) clamped to
+    [0, T-1], so finite coordinates outside [0, 1) land in the edge
+    tiles. A null, NaN or infinite coordinate raises instead of being
+    clamped into an edge tile. The one axis index of the tile, cell and
+    radius-join grids."""
     t = tiles_per_side
     i = F.floor(coord * F.lit(float(t))).cast("long")
-    return F.least(F.greatest(i, F.lit(0)), F.lit(t - 1))
+    err = F.raise_error(F.lit("null or non-finite coordinate in a tile or cell index"))
+    return F.when(F.abs(coord) < float("inf"), F.least(F.greatest(i, F.lit(0)), F.lit(t - 1))).otherwise(err)
 
 
 def tile_id_col(x: Column, y: Column, tiles_per_side: int) -> Column:

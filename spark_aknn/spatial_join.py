@@ -18,6 +18,9 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from spark_aknn.aknn import _checked_points
+from spark_aknn.raster import _axis_idx
+
 
 def _tiles_per_side_for_radius(radius: float) -> int:
     """Largest power-of-two grid whose tile side is still >= radius, so
@@ -34,21 +37,24 @@ def radius_join_count(
 ) -> DataFrame:
     """(input_id, n_within): training points with dist_sq <= radius^2.
 
-    Queries with no match report 0 (left-join semantics)."""
+    Queries with no match report 0 (left-join semantics). A null, NaN or
+    infinite coordinate on either side fails the call with an error
+    naming the point id, as in the all-kNN operators."""
     t = _tiles_per_side_for_radius(radius)
     r2 = radius * radius
 
-    def tile_xy(df: DataFrame) -> DataFrame:
-        return df.withColumn(
-            "tx", F.least(F.greatest(F.floor(F.col("x") * t).cast("long"), F.lit(0)), F.lit(t - 1))
-        ).withColumn(
-            "ty", F.least(F.greatest(F.floor(F.col("y") * t).cast("long"), F.lit(0)), F.lit(t - 1))
+    def tiled(df: DataFrame) -> DataFrame:
+        return _checked_points(df).select(
+            "id", "x", "y", _axis_idx(F.col("x"), t).alias("tx"), _axis_idx(F.col("y"), t).alias("ty")
         )
 
-    trn = tile_xy(training_points.select(F.col("id").alias("t_id"), F.col("x").alias("t_x"), F.col("y").alias("t_y")).withColumnsRenamed({"t_x": "x", "t_y": "y"}))
-    trn = trn.select("t_id", F.col("x").alias("t_x"), F.col("y").alias("t_y"), (F.col("ty") * t + F.col("tx")).alias("tile"))
-
-    inp = tile_xy(input_points.select("id", "x", "y"))
+    trn = tiled(training_points).select(
+        F.col("id").alias("t_id"),
+        F.col("x").alias("t_x"),
+        F.col("y").alias("t_y"),
+        (F.col("ty") * t + F.col("tx")).alias("tile"),
+    )
+    inp = tiled(input_points)
     neighborhood = F.array(*[F.lit(d) for d in (-1, 0, 1)])
     exploded = (
         inp.withColumn("dx", F.explode(neighborhood))

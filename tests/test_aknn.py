@@ -14,8 +14,9 @@ import math
 import numpy as np
 import pytest
 
+from spark_aknn import grid as grid_mod
 from spark_aknn.aknn import all_knn_join
-from spark_aknn.grid import Grid, build_grid
+from spark_aknn.grid import Grid, build_grid, plan_grid
 from spark_aknn.sweep import brute_force_topk, window_topk
 from tests.conftest import make_points_df
 
@@ -80,24 +81,26 @@ def test_invariant_under_stripe_count(spark, rng):
         _check(spark, ids, x, y, ids, x, y, k=5, num_stripes=stripes)
 
 
-def test_salted_grid_matches(spark, rng):
+def test_salted_grid_matches(spark, rng, monkeypatch):
     """Skewed y (80% of mass at exactly y=0.5, the duplicate-y edge case:
-    quantile boundaries fuse, leaving one hot stripe) -> salting path."""
+    quantile boundaries fuse, leaving one hot stripe) -> salting path,
+    armed on 600 points by a lower salting threshold."""
+    monkeypatch.setattr(grid_mod, "SALT_FACTOR", 1.5)
     n = 600
     y = np.where(rng.random(n) < 0.8, 0.5, rng.random(n))
     x = _uniform(rng, n)
     ids = np.arange(1, n + 1)
     inp = make_points_df(spark, ids, x, y)
-    grid = build_grid(inp, 8, salt_factor=1.5)
+    grid, _ = plan_grid(inp, None, 8)
     assert grid.x_splits, "expected substripes for the hot stripe"
     _check(spark, ids, x, y, ids, x, y, k=5, grid=grid)
 
 
 def test_exact_split_error_tracks_stripe_count(spark, rng):
-    """A sketch too coarse for the stripe count makes build_grid draw a
-    fresh one sized to it, whose rank error stays below the gap between
-    boundaries; otherwise adjacent boundary queries return the same
-    sample and boundaries spuriously fuse whenever eps > 1/S —
+    """build_grid refuses a sketch too coarse for the stripe count, and
+    plan_grid draws one sized to it, whose rank error stays below the
+    gap between boundaries; otherwise adjacent boundary queries return
+    the same sample and boundaries spuriously fuse whenever eps > 1/S —
     independent of n (measured at n=64M/S=2530 with a fixed 1e-3: 1114
     of 2530 stripes survived on a UNIFORM corpus)."""
     n, stripes = 100_000, 2000
@@ -105,7 +108,9 @@ def test_exact_split_error_tracks_stripe_count(spark, rng):
     x, y = _uniform(rng, n), _uniform(rng, n)
     pts = make_points_df(spark, ids, x, y)
     coarse = [i / 100 for i in range(1, 100)]
-    grid = build_grid(pts, stripes, salt_factor=0, sketch=coarse)
+    with pytest.raises(ValueError, match="sketch_resolution"):
+        build_grid(pts, stripes, coarse)
+    grid, _ = plan_grid(pts, None, stripes)
     assert grid.num_stripes >= 0.95 * stripes, (
         f"boundary fusion on uniform data: {grid.num_stripes}/{stripes}"
     )
@@ -113,15 +118,17 @@ def test_exact_split_error_tracks_stripe_count(spark, rng):
 
 def test_explicit_stripe_count_clamps_without_fusion(spark, rng):
     """Stripe counts above QUANTILE_GRID // 2 are clamped to it, where
-    the sketch still has >= 2 gaps per stripe: the grid is the clamp's
-    full stripe count, with no boundary fused."""
-    from spark_aknn.grid import QUANTILE_GRID, plan_grid
+    a full-resolution sketch still has >= 2 gaps per stripe: the grid
+    is the clamp's full stripe count, with no boundary fused — built
+    directly by build_grid and planned by plan_grid."""
+    from spark_aknn.grid import QUANTILE_GRID, quantile_sketch
 
     n = 100_000
     ids = np.arange(1, n + 1)
     pts = make_points_df(spark, ids, _uniform(rng, n), _uniform(rng, n))
-    assert build_grid(pts, 20_000, salt_factor=0).num_stripes == QUANTILE_GRID // 2
-    grid, counted = plan_grid(pts, None, 20_000, salt_factor=0)
+    sketch = quantile_sketch(pts, "y", QUANTILE_GRID)
+    assert build_grid(pts, 20_000, sketch).num_stripes == QUANTILE_GRID // 2
+    grid, counted = plan_grid(pts, None, 20_000)
     assert grid.num_stripes == QUANTILE_GRID // 2
     assert counted == n
 
@@ -133,7 +140,7 @@ def test_both_operators_plan_the_same_grid(spark, rng, tmp_path, monkeypatch):
     direct plan_grid call returns."""
     import json
 
-    from spark_aknn import aknn, grid as grid_mod, manifest
+    from spark_aknn import aknn, manifest
 
     n = 3000
     ids = np.arange(1, n + 1)
@@ -164,7 +171,7 @@ def test_both_operators_plan_the_same_grid(spark, rng, tmp_path, monkeypatch):
     pts.unpersist()
 
 
-def test_clustered_zipf_differential(spark):
+def test_clustered_zipf_differential(spark, monkeypatch):
     """The synthetic-campaign families (tools/run_synthetic.py) at small
     n against the brute-force oracle — clustered-quantized (duplicate-
     heavy: salting MUST arm, as the campaign asserts at 8M) and zipf
@@ -177,8 +184,9 @@ def test_clustered_zipf_differential(spark):
     # quantize=1 at n=800 plays the role 3 decimals play at the 8M
     # campaign: per-distinct-y counts must exceed the stripe target for
     # boundaries to fuse, and the zipf cluster skew concentrates mass
-    # so a fused stripe clears the salt threshold (fusion + a hot
-    # stripe is what arms salting)
+    # so a fused stripe clears the (lowered) salt threshold (fusion + a
+    # hot stripe is what arms salting)
+    monkeypatch.setattr(grid_mod, "SALT_FACTOR", 1.5)
     for family, maker in (
         (
             "clustered",
@@ -194,16 +202,13 @@ def test_clustered_zipf_differential(spark):
             n_t, xe = count_and_extent(pts)
             sketch = quantile_sketch(pts, "y", sketch_resolution(math.isqrt(n_t)))
             stripes = auto_num_stripes(n_t, k, 8)
-            grid = build_grid(pts, stripes, salt_factor=1.5, sketch=sketch)
+            grid = build_grid(pts, stripes, sketch)
             if family == "clustered":
                 assert grid.x_splits, "quantized clusters must fuse + salt"
             _check(spark, ids, x, y, ids, x, y, k=k, grid=grid)
             # anisotropy-merged grid (what all_knn_join builds by
             # default): exactness must hold for it too
-            merged = build_grid(
-                pts, stripes, salt_factor=1.5, sketch=sketch,
-                k=k, x_extent=xe, n_total=n_t,
-            )
+            merged = build_grid(pts, stripes, sketch, k=k, x_extent=xe, n_total=n_t)
             if merged.y_splits != grid.y_splits:
                 _check(spark, ids, x, y, ids, x, y, k=k, grid=merged)
 
@@ -250,6 +255,17 @@ def test_zipf_anisotropy_merge_bounds_escapes(spark):
     assert escape_frac(merged) < 0.05
     assert escape_frac(plain) > 0.3  # the failure mode the merge exists for
     pts.unpersist()
+
+
+def test_anisotropy_merge_survives_an_underflowing_margin():
+    """A margin whose square underflows to 0 (here 1e-200) crashed the
+    anisotropy merge with ZeroDivisionError; no stripe can be tall
+    enough for it, so the merge keeps only the first boundary."""
+    from spark_aknn.grid import splits_from_sketch
+
+    sketch = [i / 64 for i in range(1, 64)]
+    splits = splits_from_sketch(sketch, 8, n=1000, k=5, x_extent=(0.0, 1.0), margin_factor=1e-200)
+    assert len(splits) == 3
 
 
 def test_training_smaller_than_k(spark, rng):
@@ -357,6 +373,32 @@ def test_non_finite_coordinates_raise(spark, rng, tmp_path, operator, bad_side, 
             checkpointed_aknn(spark, inp, trn, str(tmp_path / "ckpt"), k=5).collect()
 
 
+@pytest.mark.parametrize("operator", ["join", "checkpointed"])
+@pytest.mark.parametrize("margin_factor", [float("nan"), -0.5])
+def test_margin_factor_must_be_a_non_negative_number(spark, tmp_path, operator, margin_factor):
+    """A NaN margin makes every escape comparison false, so queries were
+    certified against coverage that was never replicated: a 3,000-point
+    uniform self-join (k = 5) returned 1,967 wrong neighbour ids across
+    785 queries with no error. A negative one was silently run as 0.
+    Both operators now raise before their first Spark job."""
+    from spark_aknn.manifest import checkpointed_aknn
+
+    sc = spark.sparkContext
+    n = 300
+    pts = make_points_df(spark, np.arange(1, n + 1), np.linspace(0, 1, n), np.linspace(1, 0, n) ** 2)
+    group = f"margin-guard-{operator}-{margin_factor}"
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(ValueError, match="margin_factor"):
+            if operator == "join":
+                all_knn_join(pts, pts, k=5, margin_factor=margin_factor)
+            else:
+                checkpointed_aknn(spark, pts, pts, str(tmp_path / "ck"), k=5, margin_factor=margin_factor)
+        assert not sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
 def test_k1_and_single_point(spark):
     _check(spark, [1, 2], [0.1, 0.9], [0.1, 0.9], [7], [0.5], [0.5], k=1)
 
@@ -430,19 +472,6 @@ def test_zipf_skew(spark, rng):
     _check(spark, ids, x, y, ids, x, y, k=7, num_stripes=10)
 
 
-def test_split_on_input_matches_training(spark, rng):
-    """splitByT twin (AllKnnResultStripes.h:317-423): boundaries from the
-    input side must produce identical results — and on the unbalanced
-    two-table shape (queries confined to a thin y-band), the boundary
-    placement actually differs between the two modes."""
-    nq, nt = 60, 900
-    qx, qy = _uniform(rng, nq), _uniform(rng, nq, 0.4, 0.6)
-    tx, ty = _uniform(rng, nt), _uniform(rng, nt)
-    qids, tids = np.arange(1, nq + 1), np.arange(1, nt + 1)
-    _check(spark, qids, qx, qy, tids, tx, ty, k=5, split_on="input")
-    _check(spark, qids, qx, qy, tids, tx, ty, k=5, split_on="training")
-
-
 def test_stage1_cache_released(spark, rng):
     """Repeated all_knn_join calls must not accumulate cached stage-1
     DataFrames (VERDICT r01: persist() leak)."""
@@ -493,23 +522,25 @@ def test_frontier_plan_has_no_nested_loop_join(spark, rng):
     assert "BroadcastNestedLoopJoin" not in explained
 
 
-def test_margin_assignment_covers_expanded_rect(spark, rng):
+def test_margin_assignment_covers_expanded_rect(spark, rng, monkeypatch):
     """The exactness of the margin-replicated stage 1 rests on one
     invariant: every cell's training must cover its margin-EXPANDED
     rectangle (cells_df m_* bounds), because the escape test certifies
     queries against exactly those bounds. Check it exhaustively on a
     skewed grid (fused boundaries -> salted substripes) so both the
-    y-import and x-span legs are exercised."""
-    from spark_aknn.grid import assign_cells_margin, build_grid, cells_df
+    y-import and x-span legs are exercised, and at margin 0, where the
+    expanded rectangle is the cell itself."""
+    from spark_aknn.grid import assign_cells_margin, cells_df
 
+    monkeypatch.setattr(grid_mod, "SALT_FACTOR", 1.5)
     n = 800
     y = np.where(rng.random(n) < 0.7, 0.5, rng.random(n))
     x = _uniform(rng, n)
     ids = np.arange(1, n + 1)
     pts = make_points_df(spark, ids, x, y)
-    grid = build_grid(pts, 8, salt_factor=1.5)
+    grid, _ = plan_grid(pts, None, 8)
     assert grid.x_splits, "need substripes to exercise the x-margin leg"
-    for mf in (0.5, 0.9, 2.0):
+    for mf in (0.0, 0.5, 0.9, 2.0):
         assigned = assign_cells_margin(pts, grid, mf).toPandas()
         cells = cells_df(spark, grid, margin_factor=mf).toPandas()
         got = {

@@ -3,11 +3,13 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from spark_aknn.cells import cell_decode_numpy, cell_id, cell_numpy, parent_cell
 from spark_aknn.pip import pip_numpy, points_in_polygon_col, tag_points_in_polygons
 from spark_aknn.raster import assign_tiles, polygon_tile_cover, tile_histogram
+from spark_aknn.spatial_join import radius_join_count
 from tests.conftest import make_points_df
 
 CONCAVE = np.array([(0.1, 0.1), (0.9, 0.1), (0.9, 0.9), (0.5, 0.3), (0.1, 0.9)])
@@ -89,3 +91,31 @@ def test_polygon_tile_cover(spark):
     # the [0,0.5)^2 square covers exactly the 4x4 low corner of an 8x8 grid
     assert len(cover) == 16
     assert set(cover.tile_id) == {ty * 8 + tx for ty in range(4) for tx in range(4)}
+
+
+@pytest.mark.parametrize(
+    "col, value", [("x", float("nan")), ("y", None), ("x", float("-inf"))]
+)
+def test_geo_operators_reject_non_finite_coordinates(spark, col, value):
+    """A null, NaN or infinite coordinate used to be mapped silently: the
+    radius join gave the point n_within = 0 and never counted it as a
+    neighbour, tile_histogram still counted all 200 points, and cell_id
+    put a NaN x in cell 16 and a null y in cell 170 at level 4. The
+    radius join now names the point id, as the all-kNN operators do,
+    and the tile and cell indexes raise."""
+    n = 200
+    good = make_points_df(spark, np.arange(1, n + 1), np.linspace(0.01, 0.99, n), np.linspace(0.99, 0.01, n))
+    bad = good.withColumn(
+        col, F.when(F.col("id") == 8, F.lit(value).cast("double")).otherwise(F.col(col))
+    )
+    with pytest.raises(Exception, match="null or non-finite coordinate at point id 8"):
+        radius_join_count(bad, good, 0.05).collect()
+    with pytest.raises(Exception, match="null or non-finite coordinate at point id 8"):
+        radius_join_count(good, bad, 0.05).collect()
+    with pytest.raises(Exception, match="null or non-finite coordinate"):
+        tile_histogram(bad, 4).collect()
+    with pytest.raises(Exception, match="null or non-finite coordinate"):
+        bad.select(cell_id(F.col("x"), F.col("y"), 4)).collect()
+    # finite coordinates outside [0, 1) still clamp into the edge tiles
+    edge = make_points_df(spark, [1, 2], [-3.0, 1.0], [0.5, 7.0])
+    assert sorted(r.tile_id for r in assign_tiles(edge, 4).collect()) == [8, 15]

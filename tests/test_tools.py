@@ -64,3 +64,29 @@ def test_default_cpus_falls_back_to_usable_cores(monkeypatch):
     assert default_cpus() == len(os.sched_getaffinity(0))
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
     assert default_cpus() == 3
+
+
+def test_code_lines_skips_comments_docstrings_and_blank_lines():
+    import code_lines
+
+    src = '''"""Module docstring
+over two lines."""
+
+import os  # a trailing comment keeps its line
+
+
+class A:
+    """Class docstring."""
+
+    # a comment line
+    def f(self):
+        """Function
+        docstring."""
+        text = """a multi-line
+string literal
+counts line by line"""
+        return (text,
+                os.sep)
+'''
+    # import, class, def, the 3-line literal, and the 2-line return
+    assert code_lines.code_lines(src) == 8
